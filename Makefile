@@ -2,6 +2,8 @@
 #   make selfcheck-report ROUND=5   -> SELFCHECK_r5.txt (hostile, sf0.01 + sf0.1)
 #   make bench                      -> one JSON line on stdout (median-of-3/query)
 #   make test                       -> full pytest suite
+#   make perfbench-smoke            -> ~1-minute end-to-end check of the
+#                                      lakehouse jobs on tiny inputs
 #
 # selfcheck-report is SELF-VALIDATING: the tool's parent process is the only
 # stdout writer (worker Spark/DuckDB noise goes to per-worker logs under
@@ -12,7 +14,7 @@
 ROUND ?= 6
 WORKERS ?= 6
 
-.PHONY: selfcheck-report bench test scaling scaling-ladder
+.PHONY: selfcheck-report bench test perfbench-smoke scaling scaling-ladder
 
 selfcheck-report:
 	{ echo "== hostile sf0.01 =="; \
@@ -27,6 +29,16 @@ bench:
 
 test:
 	python -m pytest tests/ -q
+
+# Both perfbench workloads on tiny inputs; fails unless each run's last
+# stdout line reports every output check correct and no failed op.
+perfbench-smoke:
+	@for w in ingest curate; do \
+	  python3 perfbench/run.py --workload $$w --seed 1 --seconds 2 --trace 0 --smoke \
+	  | tail -n 1 | python3 -c 'import json, sys; r = json.loads(sys.stdin.read()); \
+	    print(sys.argv[1], "correct:", r["correct"], "failed:", r["failed"]); \
+	    sys.exit(not (r["correct"] is True and r["failed"] == 0))' $$w || exit 1; \
+	done
 
 # Decade-scaling gate (SCALING.md protocol, CI shape): regenerates the
 # 10x scale pair if absent, probes every LINEAR-CLAIMED heavy query, and

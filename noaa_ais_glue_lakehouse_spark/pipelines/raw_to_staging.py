@@ -12,15 +12,23 @@ SURVEY §7.4 resolutions:
 - quarantine rows keep their own year/month/day (partition-aware sink)
   instead of stamping the whole spill with ``df.first()``'s values.
 
-Scale: the chain is a single narrow projection pipeline — no shuffle
-until the dedup groupBy, and the partitioned write reuses the dedup
-shuffle's layout when AQE is on. At 100 TB the input is a partitioned
-table root; Catalyst prunes the day window from the filter, replacing
-the reference's driver-side path enumeration.
+Scale: the runner parses each input once. It persists the shared prefix
+(scan → normalize → align → empty→null → timestamp parse) with
+``MEMORY_AND_DISK``, and the quarantine bounded count, the quarantine
+write and the staging write all read that one materialization instead
+of each re-running the scan and the parse. Blocks that exceed executor
+storage memory spill to local disk, so a large backfill costs a local
+disk read, not a failure or a second scan. The cache is released in a
+``finally`` on every exit. After the prefix the chain is narrow until
+the dedup groupBy, and the partitioned write reuses the dedup shuffle's
+layout when AQE is on. At 100 TB the input is a partitioned table root;
+Catalyst prunes the day window from the filter, replacing the
+reference's driver-side path enumeration.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,6 +53,31 @@ from noaa_ais_glue_lakehouse_spark.sources.writers import (
 PARTITION_COLS = ["year", "month", "day"]
 
 
+def parse_raw(df: DataFrame, schema: T.StructType | None = None) -> DataFrame:
+    """P1→P4: the prefix both outputs share — normalize, schema-align,
+    empty→null, timestamp parse (unparseable rows dropped) and the
+    year/month/day strings."""
+    out = normalize_columns(df)
+    out = align_schema(out, schema or AIS_RAW_SCHEMA)
+    out = replace_empty_with_null(out)
+    return parse_base_datetime(out)
+
+
+def split_and_clean(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """P5→P7 + D1 over ``parse_raw``'s output → (staging, quarantine):
+    coordinate split, clamp, content dedup, movement flag, INT
+    partitions."""
+    valid, invalid = clean_coordinates(parsed)
+    valid = clean_sog_cog_heading(valid)
+    valid = dedup_by_content_hash(valid)
+    valid = derive_movement_flag(valid)
+    # SURVEY §7.4.4 resolution: INT partition columns
+    for c in PARTITION_COLS:
+        valid = valid.withColumn(c, F.col(c).cast("int"))
+        invalid = invalid.withColumn(c, F.col(c).cast("int"))
+    return valid, invalid
+
+
 def transform_raw_to_staging(
     df: DataFrame, schema: T.StructType | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -54,23 +87,7 @@ def transform_raw_to_staging(
     DataFrames exactly like the reference's integration slice
     (``tests/integration/test_integration_pipeline.py:11-35``).
     """
-    out = normalize_columns(df)
-    out = align_schema(out, schema or AIS_RAW_SCHEMA)
-    out = replace_empty_with_null(out)
-    out = parse_base_datetime(out)  # derives year/month/day strings
-    valid, invalid = clean_coordinates(out)
-    valid = clean_sog_cog_heading(valid)
-    valid = dedup_by_content_hash(valid)
-    valid = derive_movement_flag(valid)
-    # SURVEY §7.4.4 resolution: INT partition columns
-    for c in PARTITION_COLS:
-        valid = valid.withColumn(c, F.col(c).cast("int"))
-        invalid = (
-            invalid.withColumn(c, F.col(c).cast("int"))
-            if c in invalid.columns
-            else invalid
-        )
-    return valid, invalid
+    return split_and_clean(parse_raw(df, schema))
 
 
 def run_raw_to_staging(
@@ -91,17 +108,23 @@ def run_raw_to_staging(
     )
 
     raw = read_csv_with_header(spark, input_path)
-    staging, quarantine = transform_raw_to_staging(raw, schema)
-    n_quarantined = (
-        write_quarantine(quarantine, quarantine_path, PARTITION_COLS)
-        if quarantine_path
-        else 0
-    )
-    # A7: row counters ride along with the write job (observe()), replacing
-    # the reference's extra count() jobs behind LOG_COUNTS
-    staging, obs = with_row_observations(staging, null_check_cols=["MMSI"])
-    write_partitioned_parquet(staging, output_path, PARTITION_COLS)
-    metrics = obs.get
+    # both outputs branch off the parse: persisted so the bounded count and
+    # the two writes share one scan (see "Scale" above)
+    parsed = parse_raw(raw, schema).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        staging, quarantine = split_and_clean(parsed)
+        n_quarantined = (
+            write_quarantine(quarantine, quarantine_path, PARTITION_COLS)
+            if quarantine_path
+            else 0
+        )
+        # A7: row counters ride along with the write job (observe()),
+        # replacing the reference's extra count() jobs behind LOG_COUNTS
+        staging, obs = with_row_observations(staging, null_check_cols=["MMSI"])
+        write_partitioned_parquet(staging, output_path, PARTITION_COLS)
+        metrics = obs.get
+    finally:
+        parsed.unpersist()
     return {
         "rows_written": metrics["n_rows"],
         "null_mmsi": metrics["n_null_MMSI"],

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import pytest
 from pyspark.sql import functions as F
 
 from noaa_ais_glue_lakehouse_spark.operators.ordering import (
@@ -174,3 +177,33 @@ def test_grs_auto_materialize_policy(spark, monkeypatch):
         not in out2._jdf.queryExecution().optimizedPlan().toString()
     )
     assert out2.agg({"running": "max"}).collect()[0][0] == expected
+
+
+def _pool_half(heap: int) -> int:
+    return int(0.5 * 0.6 * heap)  # half the default unified-memory pool
+
+
+@pytest.mark.parametrize(
+    "env, master, memory, budget",
+    [
+        (None, "local[4]", "2g", _pool_half(2 << 30)),
+        (None, "local[4]", "4096", _pool_half(4 << 30)),  # unitless = MiB, as in Spark
+        (None, "local[4]", "1.5g", _pool_half(3 << 29)),  # fractional parses
+        (None, "local[4]", "512mb", _pool_half(1 << 29)),
+        (None, "local[4]", "lots", _pool_half(1 << 30)),  # unparseable -> 1 GiB
+        (None, "spark://host:7077", "3g", _pool_half(3 << 30)),  # executor memory
+        ("12345", "local[4]", "2g", 12345),  # the knob wins when well-formed
+        ("2gb", "local[4]", "2g", _pool_half(2 << 30)),  # malformed knob falls back
+    ],
+)
+def test_grs_cache_budget_bytes_parses_defensively(monkeypatch, env, master, memory, budget):
+    from noaa_ais_glue_lakehouse_spark.operators.ordering import _grs_cache_budget_bytes
+
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_GRS_CACHE_MAX_BYTES", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_GRS_CACHE_MAX_BYTES", env)
+    key = "spark.driver.memory" if master.startswith("local") else "spark.executor.memory"
+    conf = {"spark.master": master, key: memory}
+    df = SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=SimpleNamespace(getConf=lambda: conf)))
+    assert _grs_cache_budget_bytes(df) == budget

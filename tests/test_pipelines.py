@@ -5,8 +5,11 @@ equality — the invariant the state-snapshot machinery exists for.
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from noaa_ais_glue_lakehouse_spark.pipelines.raw_to_staging import (
@@ -35,6 +38,14 @@ def _raw_rows():
 _RAW_COLS = ["mmsi", "base_date_time", "latitude", "longitude", "sog", "cog", "heading"]
 
 
+def _write_csv(path, header, rows):
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(header)
+        w.writerows(rows)
+    return str(path)
+
+
 def test_transform_raw_to_staging_slice(spark):
     df = spark.createDataFrame(_raw_rows(), _RAW_COLS)
     staging, quarantine = transform_raw_to_staging(df)
@@ -50,13 +61,7 @@ def test_transform_raw_to_staging_slice(spark):
 
 
 def test_run_raw_to_staging_files(spark, tmp_path):
-    src = str(tmp_path / "raw.csv")
-    import csv
-
-    with open(src, "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(_RAW_COLS)
-        w.writerows(_raw_rows())
+    src = _write_csv(tmp_path / "raw.csv", _RAW_COLS, _raw_rows())
     out = str(tmp_path / "staging")
     q = str(tmp_path / "quarantine")
     counters = run_raw_to_staging(spark, src, out, q)
@@ -66,6 +71,105 @@ def test_run_raw_to_staging_files(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 1
     assert got.first()["year"] == 2024
+
+
+def _drifted_rows(n):
+    """A drifted drop: renamed columns, no Heading, an extra column, mixed
+    timestamp formats over two days, bad timestamps, out-of-range
+    coordinates, empty fields and replayed (duplicate) lines."""
+    header = ["mmsi", "base_date_time", "latitude", "longitude", "sog", "cog", "Extra"]
+    formats = ["2024-01-0{d} {h:02d}:{m:02d}:00", "2024-01-0{d}T{h:02d}:{m:02d}:00Z",
+               "2024-01-0{d}T{h:02d}:{m:02d}:00.250", "2024-01-0{d} {h:02d}:{m:02d}:00+02:00"]
+    rows = []
+    for i in range(n):
+        ts = formats[i % 4].format(d=1 + i % 2, h=i % 24, m=i % 60)
+        if i % 17 == 0:
+            ts = "not-a-date"
+        lat = 95.0 if i % 13 == 0 else (i % 180) - 89.5
+        lon = -181.0 if i % 11 == 0 else (i % 360) - 179.5
+        sog = "" if i % 7 == 0 else str((i % 150) / 1.5)
+        row = [str(200 + i % 23), ts, str(lat), str(lon), sog, str(i % 400), f"x{i}"]
+        rows.append(row)
+        if i % 5 == 0:
+            rows.append(row)
+    return header, rows
+
+
+def _local_bytes_read(spark) -> int:
+    fs = spark._jvm.org.apache.hadoop.fs.FileSystem
+    return sum(s.getBytesRead() for s in fs.getAllStatistics() if s.getScheme() == "file")
+
+
+def test_run_raw_to_staging_scans_input_once(spark, tmp_path):
+    """The quarantine count, the quarantine write and the staging write
+    share one parse of the drop: the local filesystem reads the CSV about
+    once per call (the header probe adds a few KB), not once per sink."""
+    header, rows = _drifted_rows(20_000)
+    src = _write_csv(tmp_path / "raw.csv", header, rows)
+    size = (tmp_path / "raw.csv").stat().st_size
+    before = _local_bytes_read(spark)
+    counters = run_raw_to_staging(spark, src, str(tmp_path / "staging"), str(tmp_path / "q"))
+    read = _local_bytes_read(spark) - before
+    assert counters["quarantined"] > 0 and counters["rows_written"] > 0
+    assert size <= read < 1.5 * size, read / size
+
+
+def test_run_raw_to_staging_releases_parse_cache(spark, tmp_path, monkeypatch):
+    """The persisted parse is live during the writes and released on every
+    exit, including a staging write that fails (output path is a file)."""
+    from noaa_ais_glue_lakehouse_spark.pipelines import raw_to_staging
+    from noaa_ais_glue_lakehouse_spark.sources.readers import read_csv_with_header
+
+    src = _write_csv(tmp_path / "raw.csv", *_drifted_rows(200))
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    def state():
+        prefix = raw_to_staging.parse_raw(read_csv_with_header(spark, src))
+        cached = cache_manager.lookupCachedData(prefix._jdf).isDefined()
+        return cached, set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    during = []
+    real_write = raw_to_staging.write_partitioned_parquet
+
+    def spy_write(*args, **kwargs):
+        during.append(state())
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(raw_to_staging, "write_partitioned_parquet", spy_write)
+    before = state()
+    assert before[0] is False
+    raw_to_staging.run_raw_to_staging(spark, src, str(tmp_path / "staging"), str(tmp_path / "q"))
+    assert state() == before
+
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("x")
+    with pytest.raises(Py4JJavaError):
+        raw_to_staging.run_raw_to_staging(spark, src, str(blocker), str(tmp_path / "q2"))
+    assert state() == before
+    assert len(during) == 2
+    for cached, rdds in during:
+        assert cached and len(rdds - before[1]) == 1
+
+
+def test_run_raw_to_staging_equals_transform_on_drifted_input(spark, tmp_path):
+    """The runner (persisted parse, two sinks) writes exactly the rows of
+    the pure composition on the same drifted drop."""
+    from noaa_ais_glue_lakehouse_spark.sources.readers import read_csv_with_header
+
+    src = _write_csv(tmp_path / "raw.csv", *_drifted_rows(600))
+    out = str(tmp_path / "staging")
+    counters = run_raw_to_staging(spark, src, out, str(tmp_path / "q"))
+    staging, quarantine = transform_raw_to_staging(read_csv_with_header(spark, src))
+
+    def digest(df, cols):
+        h = F.xxhash64(*cols).cast("decimal(20,0)")
+        return tuple(df.agg(F.count(F.lit(1)), F.sum(h)).first())
+
+    cols = staging.columns
+    want = digest(staging, cols)
+    assert want[0] == counters["rows_written"] > 0
+    assert digest(spark.read.parquet(out).select(*cols), cols) == want
+    assert counters["quarantined"] == quarantine.count() > 0
 
 
 def test_trajectory_window_sampled_path(spark, tmp_path):
