@@ -12,26 +12,33 @@ This registry bounds the number of live operator caches. Registering a
 new cache unpersists the oldest beyond the cap — FIFO, because a
 per-query index cache is dead the moment its query's action completes,
 so oldest-first matches actual lifetime. Eviction is non-blocking and
-SAFE: an evicted DataFrame silently recomputes from the child plan kept
-inside its InMemoryRelation if it is ever re-used — correctness never
-depends on the cache, only single-evaluation economy does (the one
-partition-pinning consumer, global_running_sum, documents why two lazy
-evaluations still agree: the range sampler is seeded deterministically).
+SAFE for consumers whose plan evaluates to the same rows every time: an
+evicted DataFrame silently recomputes from the child plan kept inside its
+InMemoryRelation if it is ever re-used, so only single-evaluation economy
+depends on the cache. The one partition-pinning consumer,
+global_running_sum, is not yet such a consumer: Spark's range-partition
+sampler is not guaranteed to draw the same bounds on a second evaluation,
+so its two lazy evaluations agree only while the cache or exchange reuse
+keeps them to one.
 
 Cap via ``SPARK_GRAFT_QUERY_CACHE_CAP`` (default 16): the driver, bench
 and selfcheck all run queries sequentially, so a handful of live caches
 suffices; a session running K queries concurrently wants
 cap >= K x caches-per-query (no query here registers more than two).
+Registration and release hold one lock, so concurrent callers never evict
+past the cap or pop an empty registry.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from collections import deque
 
 from pyspark.sql import DataFrame
 
 _LIVE: deque[DataFrame] = deque()
+_LOCK = threading.Lock()
 
 
 def _cap() -> int:
@@ -48,16 +55,18 @@ def query_scoped_cache(df: DataFrame) -> DataFrame:
     registered cache once more than the cap are alive.
     """
     df = df.cache()
-    _LIVE.append(df)
-    while len(_LIVE) > _cap():
-        _evict(_LIVE.popleft())
+    with _LOCK:
+        _LIVE.append(df)
+        while len(_LIVE) > _cap():
+            _evict(_LIVE.popleft())
     return df
 
 
 def release_query_caches() -> None:
     """Unpersist every registered operator cache immediately."""
-    while _LIVE:
-        _evict(_LIVE.popleft())
+    with _LOCK:
+        while _LIVE:
+            _evict(_LIVE.popleft())
 
 
 def live_cache_count() -> int:

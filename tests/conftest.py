@@ -1,26 +1,20 @@
 """Shared Spark fixture.
 
-Deliberately a *vanilla* SparkSession (not our ``session.get_spark``
-factory) so every operator is exercised the way the external driver runs
-it — any dependency on factory-only confs is a bug the suite must catch
+Deliberately the *vanilla* session profile (not the engine's ``default``
+one) so every operator is exercised the way the external driver runs it —
+any dependency on default-profile-only confs is a bug the suite must catch
 (the round-1 nanos-timestamp regression was exactly that class).
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import SparkSession
+
+from noaa_ais_glue_lakehouse_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("noaa-ais-lakehouse-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    s = get_spark("noaa-ais-lakehouse-spark-tests", profile="vanilla")
     yield s
     s.stop()

@@ -8,6 +8,9 @@ dead InMemoryRelations, (b) leave evicted DataFrames fully usable
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pytest
 
 from noaa_ais_glue_lakehouse_spark.operators import _cache
@@ -73,3 +76,37 @@ def test_operator_caches_register(spark, monkeypatch):
     assert total == sum(i % 7 for i in range(1000))
     _cache.release_query_caches()
     assert live_cache_count() == 0
+
+
+def test_concurrent_registration_respects_cap(spark, monkeypatch):
+    """8 threads registering at once end at exactly the cap, and every
+    frame they pushed out was really unpersisted."""
+    monkeypatch.setenv("SPARK_GRAFT_QUERY_CACHE_CAP", "4")
+    registered = []
+    lock = threading.Lock()
+
+    def worker(t):
+        for i in range(25):
+            start = (t * 25 + i) * 10  # distinct plans: no shared cache entry
+            df = query_scoped_cache(spark.range(start, start + 10).toDF("v"))
+            with lock:
+                registered.append(df)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads as often as possible
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert len(registered) == 200
+    assert live_cache_count() == 4
+    live = {id(df) for df in _cache._LIVE}
+    for df in registered:
+        if id(df) not in live:
+            lvl = df.storageLevel
+            assert not lvl.useMemory and not lvl.useDisk, lvl

@@ -272,3 +272,17 @@ def test_no_round_of_money_products():
         "integer-product helpers in plans/catalog/_shared.py): "
         + ", ".join(offenders)
     )
+
+
+def test_spark_session_built_only_in_session_factory():
+    # one place decides every session's confs: the profiles in
+    # session.py. A hand-copied builder chain elsewhere drifts from them
+    # (bench's drift rerun once ran without -XX:-ClassUnloading).
+    offenders = [
+        f for f, src in _all_sources()
+        if "SparkSession.builder" in src and f != "session.py"
+    ]
+    assert not offenders, (
+        "SparkSession.builder outside session.py (use "
+        "session.get_spark(profile=...)): " + ", ".join(offenders)
+    )

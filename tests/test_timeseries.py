@@ -86,13 +86,8 @@ def test_native_session_window_matches_sessionize(spark):
     assert n_rows[0][2] == 2  # the boundary event joined session 1
 
 
-def test_word_ngrams_short_and_exact_length():
+def test_word_ngrams_short_and_exact_length(spark):
     """Docs shorter than n yield an empty array; length == n yields one."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession() or SparkSession.builder.master(
-        "local[2]"
-    ).getOrCreate()
     df = spark.createDataFrame(
         [("a b c",), ("a b c d e",), ("",)], "text string"
     )

@@ -25,20 +25,10 @@ def main() -> None:
 
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("capture-plans")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from noaa_ais_glue_lakehouse_spark.plans import catalog
+    from noaa_ais_glue_lakehouse_spark.session import get_spark
+
+    spark = get_spark("capture-plans", profile="bench")
 
     qs = catalog.queries()
     if not names:

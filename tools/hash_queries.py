@@ -23,21 +23,10 @@ def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("hash-queries")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "12g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from noaa_ais_glue_lakehouse_spark.plans import catalog
+    from noaa_ais_glue_lakehouse_spark.session import get_spark
+
+    spark = get_spark("hash-queries", profile="bench")
 
     qs = catalog.queries()
     out = {}

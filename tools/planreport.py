@@ -6,10 +6,12 @@ Usage: python tools/planreport.py  (writes PLANS.md at the repo root)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -220,19 +222,10 @@ SHOWCASE = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from noaa_ais_glue_lakehouse_spark.plans import catalog
+    from noaa_ais_glue_lakehouse_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("planreport")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("planreport", profile="bench")
     qs = catalog.queries()
 
     out = [
@@ -259,7 +252,7 @@ def main() -> None:
         out.extend(lines)
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

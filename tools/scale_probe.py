@@ -175,21 +175,10 @@ def main() -> None:
             f"--with-c: {dir_c} missing; run synth_scale.py {root} --with-c"
         )
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("scale-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from noaa_ais_glue_lakehouse_spark.plans import catalog
+    from noaa_ais_glue_lakehouse_spark.session import get_spark
+
+    spark = get_spark("scale-probe", profile="bench")
 
     qs = catalog.queries()
     qs.update(_extra_probes())

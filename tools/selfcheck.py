@@ -7,9 +7,10 @@ dtypes (Spark ``df.dtypes`` vs the oracle's Arrow schema, both canonicalized
 timestamp ltz/ntz policy), and an order-insensitive value hash (rows
 canonicalized to strings, sorted).
 
-``--hostile`` runs the Spark side on a deliberately adversarial session —
-non-UTC timezone, TIMESTAMP_NTZ as the session timestamp type, none of our
-session-factory confs pre-set — mimicking the external driver, which passes
+``--hostile`` runs the Spark side on a deliberately adversarial session
+(the factory's ``hostile`` profile) — non-UTC timezone, TIMESTAMP_NTZ as the
+session timestamp type, none of the ``default`` profile's confs pre-set —
+mimicking the external driver, which passes
 its OWN SparkSession. Round 1 lost 22 queries and round 2 lost q22 to
 confs that were only set in the session factory; hostile mode makes that
 failure class reproducible locally. The dtype + hash checks under --hostile
@@ -151,24 +152,6 @@ def oracle_dtypes(con, sql: str) -> dict[str, str]:
     catches)."""
     schema = con.execute(f"SELECT * FROM ({sql}) __sub LIMIT 0").arrow().schema
     return {f.name.lower(): _canon_arrow_dtype(f.type) for f in schema}
-
-
-def hostile_spark(n_threads: int = 16):
-    """An adversarial stand-in for the external driver's SparkSession: no
-    factory confs, non-UTC tz, NTZ session timestamp type. Everything the
-    engine needs must be (re)settable at call time for this to pass."""
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{n_threads}]")
-        .appName("selfcheck-hostile")
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-        .config("spark.sql.shuffle.partitions", str(n_threads))
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def value_hash(rows: list[tuple], colnames: list[str]) -> str:
@@ -346,11 +329,11 @@ def run_inline(names, hostile, sf_dir, use_cache, json_out, n_threads=16) -> lis
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
-    if hostile:
-        spark = hostile_spark(n_threads)
-    else:
-        from noaa_ais_glue_lakehouse_spark.session import get_spark
+    from noaa_ais_glue_lakehouse_spark.session import get_spark
 
+    if hostile:
+        spark = get_spark("selfcheck-hostile", profile="hostile", cores=n_threads)
+    else:
         spark = get_spark("selfcheck")
     con = duckdb.connect()
     for t in TABLES:
