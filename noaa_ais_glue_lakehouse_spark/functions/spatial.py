@@ -10,7 +10,7 @@ Reference parity (all citations into /root/reference):
   base-32 encoder (``:283-317``) in a row-at-a-time ``F.udf`` — the single
   biggest physical-execution defect of the reference (SURVEY §4). Here the
   encoder is a **native column expression**: quantize lat/lon to 15-bit grid
-  ordinates, interleave the bits, slice 5-bit groups into base-32 characters.
+  ordinates, interleave the bits, print the interleave in base 32.
   Stays inside whole-stage codegen; no Python worker hop.
 """
 
@@ -54,34 +54,25 @@ def grid_cell(coord: Column, precision_deg: float) -> Column:
     return F.floor(coord / F.lit(precision_deg)).cast("long")
 
 
-def _interleave_bits(lon_q: Column, lat_q: Column, lon_bits: int, lat_bits: int) -> Column:
-    """Interleave lon_bits+lat_bits integers, lon bit first (geohash order).
+#: (shift, mask) steps that move bit i of a 32-bit value to bit 2i
+_SPREAD_STEPS = (
+    (16, 0x0000FFFF0000FFFF),
+    (8, 0x00FF00FF00FF00FF),
+    (4, 0x0F0F0F0F0F0F0F0F),
+    (2, 0x3333333333333333),
+    (1, 0x5555555555555555),
+)
 
-    lon occupies output bits total-1, total-3, …; lat occupies total-2,
-    total-4, … — with lon_bits == lat_bits (even precision) or
-    lon_bits == lat_bits+1 (odd precision, lon gets the extra bit per the
-    public geohash spec).
-    """
-    total = lon_bits + lat_bits
-    parts = []
-    for i in range(lon_bits):
-        # bit (lon_bits-1-i) of lon goes to output bit (total-1-2i)
-        parts.append(
-            F.shiftleft(
-                F.shiftright(lon_q, lon_bits - 1 - i).bitwiseAND(F.lit(1)),
-                total - 1 - 2 * i,
-            )
-        )
-    for i in range(lat_bits):
-        parts.append(
-            F.shiftleft(
-                F.shiftright(lat_q, lat_bits - 1 - i).bitwiseAND(F.lit(1)),
-                total - 2 - 2 * i,
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
+
+def _spread_bits(x: Column, bits: int) -> Column:
+    """Move bit i of the low ``bits`` bits of long ``x`` to bit 2i, zeros
+    between — the half of a Morton/geohash interleave. log2(bits)
+    shift-or-mask steps (only those whose shift is below ``bits``) instead
+    of one term per bit, so the expression tree stays small."""
+    out = x.bitwiseAND(F.lit((1 << bits) - 1))
+    for shift, mask in _SPREAD_STEPS:
+        if shift < bits:
+            out = out.bitwiseOR(F.shiftleft(out, shift)).bitwiseAND(F.lit(mask))
     return out
 
 
@@ -93,7 +84,10 @@ def geohash_expr(lat: Column, lon: Column, precision: int = 6) -> Column:
     axis gets ceil(precision*5/2) bits (the extra bit on odd lengths, per
     the public spec), lat gets the rest, and quantization
     ``floor((x-min)/range * 2^bits)`` reproduces the bisection bit
-    pattern exactly. Precisions 1–12 (total bits ≤ 60 stay inside long).
+    pattern exactly. The two ordinates are bit-interleaved, lon bit first,
+    and the interleave is printed in base 32 (``conv``), its digits
+    translated to the geohash alphabet and left-padded with the zero
+    digit. Precisions 1–12 (total bits ≤ 60 stay inside long).
     """
     if not 1 <= precision <= 12:
         raise ValueError("geohash precision must be in 1..12")
@@ -101,32 +95,26 @@ def geohash_expr(lat: Column, lon: Column, precision: int = 6) -> Column:
     lon_bits = (total + 1) // 2
     lat_bits = total // 2
 
-    lon_q = F.least(
-        F.floor(
-            (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << lon_bits))
-        ).cast("long"),
-        F.lit((1 << lon_bits) - 1),
+    lon_q = _clamped_floor((lon + F.lit(180.0)) / F.lit(360.0), lon_bits)
+    lat_q = _clamped_floor((lat + F.lit(90.0)) / F.lit(180.0), lat_bits)
+    # the most significant output bit is lon's: on even totals lon takes
+    # the odd positions, on odd totals (one extra lon bit) the even ones
+    inter = F.shiftleft(_spread_bits(lon_q, lon_bits), total - 2 * lon_bits + 1).bitwiseOR(
+        F.shiftleft(_spread_bits(lat_q, lat_bits), total - 2 * lat_bits)
     )
-    lat_q = F.least(
-        F.floor(
-            (lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(1 << lat_bits))
-        ).cast("long"),
-        F.lit((1 << lat_bits) - 1),
+    digits = F.translate(
+        F.conv(inter.cast("string"), 10, 32), "0123456789ABCDEFGHIJKLMNOPQRSTUV", _GEOHASH_B32
     )
-    inter = _interleave_bits(lon_q, lat_q, lon_bits, lat_bits)
-
-    chars = []
-    for k in range(precision):
-        idx = F.shiftright(inter, 5 * (precision - 1 - k)).bitwiseAND(F.lit(31))
-        chars.append(_b32_char(idx))
-    return F.concat(*chars)
+    return F.lpad(digits, precision, _GEOHASH_B32[0])
 
 
-def _b32_char(idx: Column) -> Column:
-    """Map a 0..31 column to its base-32 geohash character (JVM-side)."""
-    arr = F.array(*[F.lit(c) for c in _GEOHASH_B32])
-    # element_at requires an INT ordinal; the interleaved bit math is LONG
-    return F.element_at(arr, (idx + 1).cast("int"))
+def _clamped_floor(unit: Column, bits: int) -> Column:
+    """``floor(unit * 2^bits)`` as a long, the top edge (unit == 1) folded
+    into the last cell. when/otherwise, not least(): least skips NULLs and
+    would encode a NULL coordinate as the axis maximum."""
+    q = F.floor(unit * F.lit(float(1 << bits))).cast("long")
+    top = (1 << bits) - 1
+    return F.when(q > top, F.lit(top).cast("long")).otherwise(q)
 
 
 def morton_key(x: Column, y: Column, bits: int = 16) -> Column:
@@ -143,21 +131,9 @@ def morton_key(x: Column, y: Column, bits: int = 16) -> Column:
     """
     if not 1 <= bits <= 31:
         raise ValueError("morton bits must be in 1..31")
-    mask = (1 << bits) - 1
-    xm = x.cast("long").bitwiseAND(F.lit(mask))
-    ym = y.cast("long").bitwiseAND(F.lit(mask))
-    parts = []
-    for i in range(bits):
-        parts.append(
-            F.shiftleft(F.shiftright(xm, i).bitwiseAND(F.lit(1)), 2 * i)
-        )
-        parts.append(
-            F.shiftleft(F.shiftright(ym, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
-    return out
+    return _spread_bits(x.cast("long"), bits).bitwiseOR(
+        F.shiftleft(_spread_bits(y.cast("long"), bits), 1)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ clamps, 3-format timestamp coalesce) — so oracle outputs match.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -177,10 +177,13 @@ def add_movement_state(df: DataFrame, sog_col: str = "SOG", threshold: float = 0
 
     Reference: ``utils/common_functions_curated.py:237-248``.
     """
-    return df.withColumn(
-        "movement_state",
-        F.when(F.col(sog_col) < threshold, F.lit("anchored")).otherwise(F.lit("moving")),
-    )
+    return df.withColumn("movement_state", movement_state(sog_col, threshold))
+
+
+def movement_state(sog_col: str = "SOG", threshold: float = 0.5) -> Column:
+    """The ``add_movement_state`` column on its own, for callers that add
+    it in one projection with other columns."""
+    return F.when(F.col(sog_col) < threshold, F.lit("anchored")).otherwise(F.lit("moving"))
 
 
 def dedup_by_content_hash(df: DataFrame, cols: list[str] | None = None) -> DataFrame:

@@ -57,7 +57,7 @@ def sample_trajectory(
     ts_col: str,
     session_col: str,
     speed_col: str,
-    day_col: str,
+    day_col: str | list[str],
     moving_col: str = "movement_state",
     tiebreak_cols: list[str] | None = None,
     fast_threshold: float = 10.0,
@@ -70,14 +70,18 @@ def sample_trajectory(
     day endpoints ∪ per-(session,bucket) endpoints for moving rows ∪
     per-day endpoints for anchored rows. (The reference's anchored flags
     duplicate its day flags — SURVEY §7.4.9 — so the union here is
-    semantically identical while computing one window fewer.)
+    semantically identical while computing one window fewer.) A day
+    column that repeats across months (``dayofmonth``) must come with
+    its year and month: ``day_col`` accepts a list for that composite
+    key, as the reference keys its day flags by (MMSI, year, month, day).
     """
     order = [F.col(ts_col)] + [F.col(c) for c in (tiebreak_cols or [])]
     out = add_time_bucket(
         df, ts_col, speed_col, fast_threshold, fast_seconds, slow_seconds
     )
 
-    keep_day = _first_last_flags(out, [entity_col, day_col], order)
+    day_cols = [day_col] if isinstance(day_col, str) else list(day_col)
+    keep_day = _first_last_flags(out, [entity_col, *day_cols], order)
     keep_bucket = _first_last_flags(
         out, [entity_col, session_col, "time_bucket"], order
     )

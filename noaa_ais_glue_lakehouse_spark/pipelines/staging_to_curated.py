@@ -12,19 +12,31 @@ their ids — the reference's hardest invariant
 ``tests/test_pipelines.py`` incremental-vs-full equality).
 
 Scale notes: one shuffle on the entity key covers lag + prefix-sum +
-seed propagation (same window partitioning); the window filter prunes
-partitions at the scan; the state snapshot is |entities| rows, tiny.
+seed propagation (same window partitioning). Reads of a day-partitioned
+table carry a year/month/day partition predicate (the window widened by
+a day each side), so the scan opens only the window's partitions. Each
+window is evaluated once: the state snapshot (|entities| rows, tiny)
+comes from the partition directories the window's write just published,
+read back with the written schema, not from a second evaluation of the
+trajectory. The monthly summary scans the partials once: one rollup
+aggregation plus a window over start dates picks the voyages to
+rewrite. Nothing is cached: a cached plan is not coalesced by adaptive
+execution, so the curated write would land in more, smaller files.
+Every mode runs one plan: a full window is seeded from an empty
+snapshot, as a first window without a prior snapshot is, so a session
+that runs a full recompute and then daily windows compiles the
+trajectory stages once, not once per mode.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from noaa_ais_glue_lakehouse_spark.functions.spatial import geohash_expr, haversine_km
-from noaa_ais_glue_lakehouse_spark.operators.cleaning import add_movement_state
+from noaa_ais_glue_lakehouse_spark.operators.cleaning import movement_state
 from noaa_ais_glue_lakehouse_spark.operators.sampling import (
     recompute_segment_distance,
     sample_trajectory,
@@ -34,6 +46,7 @@ from noaa_ais_glue_lakehouse_spark.operators.sessionize import (
     sessionize,
 )
 from noaa_ais_glue_lakehouse_spark.operators.state import prepare_seeded_union
+from noaa_ais_glue_lakehouse_spark.pipelines.raw_to_staging import PARTITION_COLS
 from noaa_ais_glue_lakehouse_spark.sources.writers import (
     read_state_snapshot_by_date,
     write_partitioned_parquet,
@@ -41,6 +54,19 @@ from noaa_ais_glue_lakehouse_spark.sources.writers import (
 )
 
 GAP_SECONDS = 3 * 3600  # reference voyage gap rule: >3h starts a new voyage
+ONE_DAY = dt.timedelta(days=1)
+
+
+def _day_partitions(df: DataFrame, first: dt.date, last: dt.date) -> DataFrame:
+    """Keep the year/month/day partitions that can hold rows of the days
+    ``first``..``last``. A predicate on partition columns only, so the
+    scan prunes by it; one day of slack on each side covers the session
+    time zone the partition values were derived in. Tables without the
+    three columns pass through (the caller's exact filter still runs)."""
+    if not set(PARTITION_COLS) <= set(df.columns):
+        return df
+    day = F.make_date(*PARTITION_COLS)
+    return df.filter(day.between(F.lit(first - ONE_DAY), F.lit(last + ONE_DAY)))
 
 
 def compute_trajectory(
@@ -67,19 +93,16 @@ def compute_trajectory(
         session_col="VoyageID",
         seed_col=seed_col,
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy(entity_col).orderBy(ts_col)
     prev_lat, prev_lon = F.lag(lat_col).over(w), F.lag(lon_col).over(w)
-    out = out.withColumn(
-        "SegmentDistanceKM",
-        haversine_km(prev_lat, prev_lon, F.col(lat_col), F.col(lon_col)),
+    lat, lon = F.col(lat_col), F.col(lon_col)
+    return out.withColumns(
+        {
+            "SegmentDistanceKM": haversine_km(prev_lat, prev_lon, lat, lon),
+            "GeoHash": geohash_expr(lat, lon, 6),
+            "movement_state": movement_state(sog_col),
+        }
     )
-    out = out.withColumn(
-        "GeoHash", geohash_expr(F.col(lat_col), F.col(lon_col), 6)
-    )
-    out = add_movement_state(out, sog_col=sog_col)
-    return out
 
 
 def run_trajectory_window(
@@ -99,78 +122,83 @@ def run_trajectory_window(
     - ``recompute``: identical flow; the caller picks an older window to
       rebuild corrupted days — snapshots are dated, so the seed is
       whatever snapshot precedes the window (``docs/05`` semantics).
-    - ``full``: ignore state, recompute from scratch.
+    - ``full``: ignore state, recompute from scratch (seeded from an
+      empty snapshot, so it runs the same plan as the other modes).
 
     Writes the curated window partitioned by year/month/day (dynamic
-    overwrite → only the window's partitions are replaced) and refreshes
-    the ``end_date`` state snapshot from the *unsampled* result
-    (reference ``fact_voyage_trajectory.py:359-364``).
+    overwrite → only the window's partitions are replaced), then refreshes
+    the ``end_date`` state snapshot (reference
+    ``fact_voyage_trajectory.py:359-364``) from the rows just committed,
+    merged with the prior snapshot. Taking it from the sampled rows is
+    exact: sampling keeps each entity's last point of every day, so the
+    latest row per entity is the unsampled trajectory's. Only the
+    partition directories this call published are read back, so a
+    window day that produced no rows cannot feed stale rows into the
+    state.
     """
     from noaa_ais_glue_lakehouse_spark.schemas import STATE_SNAPSHOT_SCHEMA
 
     start = dt.date.fromisoformat(start_date)
     end = dt.date.fromisoformat(end_date)
     lo = dt.datetime.combine(start, dt.time.min)
-    hi = dt.datetime.combine(end + dt.timedelta(days=1), dt.time.min)
+    hi = dt.datetime.combine(end + ONE_DAY, dt.time.min)
 
-    staging = spark.read.parquet(staging_path).filter(
+    staging = _day_partitions(spark.read.parquet(staging_path), start, end).filter(
         (F.col("BaseDateTime") >= F.lit(lo)) & (F.col("BaseDateTime") < F.lit(hi))
     )
 
-    seed_col = None
-    base = staging
-    prior_state = None
-    if mode in ("incremental", "recompute"):
-        seed_date = (start - dt.timedelta(days=1)).isoformat()
+    if mode == "full":
+        prior_state = spark.createDataFrame([], STATE_SNAPSHOT_SCHEMA)
+    else:
+        seed_date = (start - ONE_DAY).isoformat()
         prior_state = read_state_snapshot_by_date(
             spark, state_prefix, seed_date, STATE_SNAPSHOT_SCHEMA
         )
-        base = prepare_seeded_union(
-            prior_state, staging, session_col="VoyageID", seed_col="SeedVoyageID"
-        )
-        seed_col = "SeedVoyageID"
-
-    curated = compute_trajectory(base, seed_col=seed_col)
-    if seed_col is not None:
-        curated = curated.filter(~F.col("is_seed")).drop(
-            "is_seed", "SeedVoyageID"
-        )
-
+    # every mode runs the same seeded plan (a full window is seeded from
+    # an empty snapshot), so one session compiles its generated code once
+    base = prepare_seeded_union(
+        prior_state, staging, session_col="VoyageID", seed_col="SeedVoyageID"
+    )
     curated = (
-        curated.withColumn("year", F.year("BaseDateTime"))
-        .withColumn("month", F.month("BaseDateTime"))
-        .withColumn("day", F.dayofmonth("BaseDateTime"))
+        compute_trajectory(base, seed_col="SeedVoyageID")
+        .filter(~F.col("is_seed"))
+        .drop("is_seed", "SeedVoyageID")
     )
 
-    # state refresh happens on the UNSAMPLED trajectory (the last point of
-    # the window must seed tomorrow even if sampling would drop it), and
-    # MERGED with the prior snapshot: an entity silent this window keeps
-    # its last-known row, otherwise its voyage counter would restart at 0
-    # on reappearance and collide with its historical voyage ids
-    new_state = latest_per_entity(curated, "MMSI", "BaseDateTime").select(
-        "MMSI", "BaseDateTime", "LAT", "LON", "VoyageID"
+    ts = F.col("BaseDateTime")
+    out = curated.withColumns(
+        {"year": F.year(ts), "month": F.month(ts), "day": F.dayofmonth(ts)}
     )
-    if prior_state is not None:
-        new_state = latest_per_entity(
-            new_state.unionByName(prior_state), "MMSI", "BaseDateTime"
-        )
-
-    out = curated
     if sample:
         out = sample_trajectory(
-            curated,
+            out,
             entity_col="MMSI",
             ts_col="BaseDateTime",
             session_col="VoyageID",
             speed_col="SOG",
-            day_col="day",
+            day_col=PARTITION_COLS,
         )
         out = recompute_segment_distance(
             out, "MMSI", "BaseDateTime", "LAT", "LON"
         )
 
-    write_partitioned_parquet(out, curated_path, ["year", "month", "day"])
-    write_state_snapshot(new_state, state_prefix, end_date)
+    published = write_partitioned_parquet(out, curated_path, PARTITION_COLS)
+    committed = (
+        spark.read.schema(out.schema)
+        .option("basePath", curated_path)
+        .parquet(*published)
+        if published
+        else spark.createDataFrame([], out.schema)
+    )
+    # MERGED with the prior snapshot: an entity silent this window keeps
+    # its last-known row, otherwise its voyage counter would restart at 0
+    # on reappearance and collide with its historical voyage ids
+    new_state = committed.select(
+        "MMSI", "BaseDateTime", "LAT", "LON", "VoyageID"
+    ).unionByName(prior_state)
+    write_state_snapshot(
+        latest_per_entity(new_state, "MMSI", "BaseDateTime"), state_prefix, end_date
+    )
     return out
 
 
@@ -186,45 +214,38 @@ def run_voyage_summary_monthly(
     ``fact_voyage_daily`` / ``fact_monthly_summary``.
 
     The month's partials are (re)written partitioned by day (dynamic
-    overwrite = embarrassingly rerunnable); the final rollup restricts
-    the *full* partials table to voyages seen this month via a left-semi
-    join on distinct keys (J3) so month-spanning voyages aggregate over
-    their complete history, then writes one row per (mmsi, voyageid)
-    partitioned by voyagestartdate.
+    overwrite = embarrassingly rerunnable). The rollup then scans the
+    *full* partials table once: one aggregation per (mmsi, voyageid)
+    gives the voyage's sums plus its first day and whether any of its
+    days falls in ``month``, so month-spanning voyages aggregate over
+    their complete history; it writes one row per voyage partitioned by
+    voyagestartdate.
     """
-    curated = spark.read.parquet(curated_path).filter(
+    first = dt.date.fromisoformat(f"{month}-01")
+    last = (first + 31 * ONE_DAY).replace(day=1) - ONE_DAY
+    curated = _day_partitions(spark.read.parquet(curated_path), first, last).filter(
         F.date_format("BaseDateTime", "yyyy-MM") == month
     )
     partials = voyage_daily_partials(curated)
     write_partitioned_parquet(partials, partials_path, ["day"])
 
-    all_partials = spark.read.parquet(partials_path)
-    month_keys = (
-        all_partials.filter(F.substring("day", 1, 7) == month)
-        .select("mmsi", "voyageid")
-        .distinct()
+    # read back with the written schema: no schema-inference job, and
+    # 'day' stays the YYYY-MM-DD string the partials were keyed by
+    all_partials = spark.read.schema(partials.schema).parquet(partials_path)
+    rolled = all_partials.groupBy("mmsi", "voyageid").agg(
+        *_rollup_aggs(),
+        F.min("day").alias("_first_day"),
+        F.max(F.substring("day", 1, 7) == month).alias("_in_month"),
     )
     # The write below dynamically overwrites every voyagestartdate partition
     # this month's voyages start on. Other voyages starting on those same
     # dates (touched by earlier/later months) would be deleted with the
-    # partition unless they are recomputed too — so widen the key set to
-    # every voyage whose first partial day lands on an affected date.
-    # (A voyage's start date IS its min 'day' partial: day_first_time is
+    # partition unless they are recomputed too — so keep every voyage that
+    # shares its first partial day with one of this month's voyages. (A
+    # voyage's start date IS its min 'day' partial: day_first_time is
     # bounded by that day.)
-    first_days = all_partials.groupBy("mmsi", "voyageid").agg(
-        F.min("day").alias("_first_day")
-    )
-    affected_dates = (
-        first_days.join(month_keys, ["mmsi", "voyageid"], "left_semi")
-        .select("_first_day")
-        .distinct()
-    )
-    keys = (
-        first_days.join(affected_dates, "_first_day", "left_semi")
-        .select("mmsi", "voyageid")
-    )
-    relevant = all_partials.join(keys, ["mmsi", "voyageid"], "left_semi")
-    summary = monthly_voyage_summary(relevant)
+    affected = F.max("_in_month").over(Window.partitionBy("_first_day"))
+    summary = _summary_columns(rolled.withColumn("_affected", affected).filter("_affected"))
     write_partitioned_parquet(summary, summary_path, ["voyagestartdate"])
     return summary
 
@@ -266,7 +287,12 @@ def monthly_voyage_summary(partials: DataFrame) -> DataFrame:
     Sum-of-sums / min-of-mins decomposition plus derived metrics,
     mirroring ``transformations/facts/fact_monthly_summary.py:79-136``.
     """
-    rolled = partials.groupBy("mmsi", "voyageid").agg(
+    return _summary_columns(partials.groupBy("mmsi", "voyageid").agg(*_rollup_aggs()))
+
+
+def _rollup_aggs() -> list:
+    """Per-voyage sums of the daily partials (sum-of-sums, min-of-mins)."""
+    return [
         F.min("day_first_time").alias("voyagestart"),
         F.max("day_last_time").alias("voyageend"),
         F.sum("day_distance_km").alias("totaldistancekm"),
@@ -274,7 +300,11 @@ def monthly_voyage_summary(partials: DataFrame) -> DataFrame:
         F.sum("day_pointcount").alias("pointcount"),
         F.sum("day_sum_lat").alias("sum_lat"),
         F.sum("day_sum_lon").alias("sum_lon"),
-    )
+    ]
+
+
+def _summary_columns(rolled: DataFrame) -> DataFrame:
+    """The summary's derived metrics over one rolled-up row per voyage."""
     dur_h = (
         F.unix_timestamp("voyageend") - F.unix_timestamp("voyagestart")
     ) / 3600.0

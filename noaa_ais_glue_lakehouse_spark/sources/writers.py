@@ -38,13 +38,14 @@ def bounded_count(df: DataFrame, threshold: int) -> int:
 
 def _swap_staged_partitions(
     spark: SparkSession, staging: str, path: str, partition_cols: list[str]
-) -> None:
+) -> list[str]:
     """Publish a staged partitioned-parquet write: one filesystem rename
     per staged partition directory into the table root (replacing any
     existing version of that partition), then drop the emptied staging
     tree. Each rename is metadata-only; a crash between renames leaves
     every partition either fully-old or fully-new, never mixed, and the
-    dot-prefixed staging residue is invisible to parquet readers."""
+    dot-prefixed staging residue is invisible to parquet readers.
+    Returns the published partition directories (qualified paths)."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path
@@ -63,6 +64,7 @@ def _swap_staged_partitions(
                     nxt.append(st.getPath())
         levels = nxt
     staging_str = staging_p.toString()
+    published = []
     for staged_dir in levels:
         rel = staged_dir.toString()[len(staging_str) + 1 :]
         dest = HPath(f"{root_p.toString()}/{rel}")
@@ -70,7 +72,9 @@ def _swap_staged_partitions(
             fs.delete(dest, True)
         fs.mkdirs(dest.getParent())
         fs.rename(staged_dir, dest)
+        published.append(dest.toString())
     fs.delete(staging_p, True)  # _SUCCESS marker + emptied tree
+    return published
 
 
 def write_partitioned_parquet(
@@ -78,7 +82,7 @@ def write_partitioned_parquet(
     path: str,
     partition_cols: list[str],
     mode: str = "overwrite",
-) -> None:
+) -> list[str] | None:
     """S4 — partitioned parquet sink with dynamic-partition-overwrite
     SEMANTICS (only partitions present in ``df`` are replaced), made
     CRASH-SAFE via the same stage-then-swap as the S5 window sink.
@@ -94,18 +98,21 @@ def write_partitioned_parquet(
     kill-mid-write test). Non-overwrite modes pass straight through:
     an append commit never deletes published data, so the v1
     FileOutputCommitter's task-file publish is already safe.
+
+    Returns the partition directories the overwrite published (exactly
+    this write's rows live there); None for the pass-through modes.
     """
     if mode != "overwrite" or not partition_cols:
         spark = df.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-        return
+        return None
     import uuid
 
     spark = df.sparkSession
     staging = f"{path.rstrip('/')}/.staging-{uuid.uuid4().hex}"
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-    _swap_staged_partitions(spark, staging, path, partition_cols)
+    return _swap_staged_partitions(spark, staging, path, partition_cols)
 
 
 def write_window_overwrite(
@@ -199,11 +206,13 @@ def read_state_snapshot_by_date(
 ) -> DataFrame:
     """S8 — dated snapshot source with empty-DataFrame fallback (first
     run / missing day). Reference: ``utils/state_io.py:14-29``.
+
+    No existence probe: the read itself raises on a missing directory
+    and on one without data files (nothing to infer a schema from).
     """
     path = f"{prefix.rstrip('/')}/by_date={date_str}/"
     try:
         raw = spark.read.parquet(path)
-        raw.head(1)  # existence probe only
     except Exception:
         return spark.createDataFrame([], schema)
     # cast-by-name to the declared schema rather than an enforced read:

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import csv
 import datetime as dt
+import re
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -20,6 +21,7 @@ from noaa_ais_glue_lakehouse_spark.pipelines.staging_to_curated import (
     compute_trajectory,
     monthly_voyage_summary,
     run_trajectory_window,
+    run_voyage_summary_monthly,
     voyage_daily_partials,
 )
 
@@ -252,6 +254,31 @@ def test_incremental_equals_full_recompute(spark, tmp_path):
     assert want[(1, dt.datetime(2024, 1, 2, 9))] == want[(1, dt.datetime(2024, 1, 2, 0, 30))] + 1
 
 
+def _ops_above_union(df) -> list[str]:
+    """Operator names of the optimized plan from the root down to the
+    seeded union; the branches below it read each mode's snapshot."""
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
+    ops = [re.sub(r"^[\s:+-]*", "", line).split(" ")[0] for line in tree.splitlines()]
+    return ops[: ops.index("Union") + 1]
+
+
+def test_full_and_seeded_windows_run_one_plan(spark, tmp_path):
+    """A full window is seeded from an empty snapshot, so above the seeded
+    union its plan is the incremental window's: a session compiles the
+    trajectory stages once for every mode."""
+    staging_path = str(tmp_path / "staging")
+    _staging_df(spark).write.parquet(staging_path)
+    curated, state = str(tmp_path / "curated"), str(tmp_path / "state")
+    full = run_trajectory_window(
+        spark, staging_path, curated, state, "2024-01-01", "2024-01-01", mode="full"
+    )
+    seeded = run_trajectory_window(
+        spark, staging_path, curated, state, "2024-01-02", "2024-01-02",
+        mode="incremental",
+    )
+    assert _ops_above_union(full) == _ops_above_union(seeded)
+
+
 def test_silent_entity_keeps_voyage_counter(spark, tmp_path):
     """An entity with no data in a window must keep its snapshot row, so a
     later reappearance continues its voyage ids instead of restarting at 0
@@ -388,3 +415,179 @@ def test_daily_partials_and_monthly_rollup(spark):
     assert abs(row["duration_hours"] - 4.5) < 1e-6
     # avg position = mean of the three points
     assert abs(row["avglat"] - (11.0 + 11.1 + 11.2) / 3) < 1e-4
+
+
+def test_sampling_day_endpoints_are_per_calendar_day(spark, tmp_path):
+    """Anchored pings on Jan 5 and Feb 5 are two days, not one
+    day-of-month group: each day keeps its first and last ping."""
+    times = [
+        dt.datetime(2024, m, 5, h, minute)
+        for m in (1, 2)
+        for h, minute in ((8, 0), (8, 10), (8, 20), (8, 30))
+    ]
+    staging = str(tmp_path / "staging")
+    spark.createDataFrame(
+        [(7, t, 10.0, 20.0, 0.0) for t in times],
+        ["MMSI", "BaseDateTime", "LAT", "LON", "SOG"],
+    ).write.parquet(staging)
+    out = run_trajectory_window(
+        spark, staging, str(tmp_path / "curated"), str(tmp_path / "state"),
+        "2024-01-05", "2024-02-05", mode="full", sample=True,
+    )
+    kept = sorted(r["BaseDateTime"] for r in out.collect())
+    assert kept == [times[0], times[3], times[4], times[7]]
+
+
+def _staging_with_silent_entity(spark):
+    """``_staging_df`` plus an entity seen only on day 1 and a densely
+    pinging anchored entity that sampling thins on both days."""
+    rows = [(3, dt.datetime(2024, 1, 1, 12), 40.0, 50.0, 8.0)]
+    for day in (1, 2):
+        rows += [
+            (4, dt.datetime(2024, 1, day, 12) + dt.timedelta(minutes=5 * i), 30.0, 31.0, 0.0)
+            for i in range(24)
+        ]
+    return _staging_df(spark).unionByName(
+        spark.createDataFrame(rows, ["MMSI", "BaseDateTime", "LAT", "LON", "SOG"])
+    )
+
+
+def test_state_snapshot_same_with_and_without_sampling(spark, tmp_path):
+    """The snapshot comes from the committed (sampled) rows; sampling keeps
+    every entity's last point of each day, so it equals the unsampled
+    run's snapshot, silent entities included."""
+    staging = str(tmp_path / "staging")
+    _staging_with_silent_entity(spark).write.parquet(staging)
+    snapshots = {}
+    for sample in (True, False):
+        curated, state = str(tmp_path / f"curated{sample}"), str(tmp_path / f"state{sample}")
+        counts = []
+        for d in ("2024-01-01", "2024-01-02"):
+            out = run_trajectory_window(
+                spark, staging, curated, state, d, d, mode="incremental", sample=sample
+            )
+            counts.append(out.count())
+        snapshots[sample] = (
+            sorted(tuple(r) for r in spark.read.parquet(f"{state}/by_date=2024-01-02").collect()),
+            counts,
+        )
+    (sampled, sampled_counts), (full, full_counts) = snapshots[True], snapshots[False]
+    assert sum(sampled_counts) < sum(full_counts)  # sampling did thin
+    assert sampled == full
+    assert {r[0] for r in full} == {1, 2, 3, 4}  # entity 3 carried over from day 1
+
+
+def _sql_plans(spark, fn) -> list[str]:
+    """Physical plan descriptions of the SQL executions ``fn`` runs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+
+    seen = {e.executionId() for e in executions()}
+    fn()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() not in seen]
+
+
+def _day_partitioned_staging(spark, path):
+    df = _staging_df(spark)
+    ts = F.col("BaseDateTime")
+    df.withColumns(
+        {"year": F.year(ts), "month": F.month(ts), "day": F.dayofmonth(ts)}
+    ).write.partitionBy("year", "month", "day").parquet(path)
+
+
+def test_window_scans_staging_once(spark, tmp_path):
+    """One window evaluates its trajectory once: across all of the call's
+    SQL executions, the staging table is scanned by a single FileScan
+    (the state snapshot reads the committed rows instead)."""
+    staging = str(tmp_path / "staging")
+    _day_partitioned_staging(spark, staging)
+    curated, state = str(tmp_path / "curated"), str(tmp_path / "state")
+    run_trajectory_window(spark, staging, curated, state, "2024-01-01", "2024-01-01")
+    plans = _sql_plans(
+        spark,
+        lambda: run_trajectory_window(spark, staging, curated, state, "2024-01-02", "2024-01-02"),
+    )
+    location = f"Location: InMemoryFileIndex [file:{staging}]"
+    assert sum(p.count(location) for p in plans) == 1
+    # the snapshot reads back only the partition this window published
+    assert any(f"[file:{curated}/year=2024/month=1/day=2]" in p for p in plans)
+
+
+def test_window_and_summary_reads_prune_partitions(spark, tmp_path):
+    """The staging read of a window and the curated read of the monthly
+    summary carry a year/month/day partition predicate at the scan."""
+    import re
+
+    staging = str(tmp_path / "staging")
+    _day_partitioned_staging(spark, staging)
+    curated = str(tmp_path / "curated")
+    window_plans = _sql_plans(
+        spark,
+        lambda: run_trajectory_window(
+            spark, staging, curated, str(tmp_path / "state"), "2024-01-02", "2024-01-02"
+        ),
+    )
+    summary_plans = _sql_plans(
+        spark,
+        lambda: run_voyage_summary_monthly(
+            spark, curated, str(tmp_path / "partials"), str(tmp_path / "summary"), "2024-01"
+        ),
+    )
+
+    def partition_filters(plans, path):
+        scan = re.compile(
+            re.escape(f"Location: InMemoryFileIndex [file:{path}]") + r"\nPartitionFilters: \[(.*)\]"
+        )
+        return [m.group(1) for p in plans for m in scan.finditer(p)]
+
+    for filters in (partition_filters(window_plans, staging), partition_filters(summary_plans, curated)):
+        assert filters and all("make_date(year" in f for f in filters), filters
+
+
+def _semi_join_summary(all_partials, month):
+    """The summary's former key selection: this month's voyage keys,
+    widened by semi-joins to every voyage sharing a start date."""
+    month_keys = (
+        all_partials.filter(F.substring("day", 1, 7) == month)
+        .select("mmsi", "voyageid")
+        .distinct()
+    )
+    first_days = all_partials.groupBy("mmsi", "voyageid").agg(F.min("day").alias("_first_day"))
+    affected_dates = (
+        first_days.join(month_keys, ["mmsi", "voyageid"], "left_semi")
+        .select("_first_day")
+        .distinct()
+    )
+    keys = first_days.join(affected_dates, "_first_day", "left_semi").select("mmsi", "voyageid")
+    return monthly_voyage_summary(all_partials.join(keys, ["mmsi", "voyageid"], "left_semi"))
+
+
+def test_one_pass_summary_matches_semi_join_selection(spark, tmp_path):
+    """Over three months whose voyages share start dates across month
+    boundaries, every monthly run rewrites exactly the voyages the
+    semi-join formulation selected, with the same rollups."""
+    rows = []
+    for mmsi, start, hours in (
+        (1, dt.datetime(2024, 1, 31, 8), (0, 1)),       # Jan 31 only
+        (2, dt.datetime(2024, 1, 31, 22), (0, 2, 4)),   # Jan 31 -> Feb 1
+        (3, dt.datetime(2024, 2, 10, 6), (0, 2)),       # Feb 10 only
+        (4, dt.datetime(2024, 2, 10, 23), (0, 2, 4)),   # Feb 10 -> Feb 11
+        (5, dt.datetime(2024, 2, 29, 21), (0, 2, 4)),   # Feb 29 -> Mar 1
+        (6, dt.datetime(2024, 2, 29, 5), (0, 1)),       # Feb 29 only
+        (7, dt.datetime(2024, 3, 15, 5), (0, 1)),       # Mar 15 only
+    ):
+        rows += [(mmsi, start + dt.timedelta(hours=h), 10.0 + h, 20.0, 5.0) for h in hours]
+    curated = str(tmp_path / "curated")
+    compute_trajectory(
+        spark.createDataFrame(rows, ["MMSI", "BaseDateTime", "LAT", "LON", "SOG"])
+    ).write.parquet(curated)
+    partials, summary = str(tmp_path / "partials"), str(tmp_path / "summary")
+    for month in ("2024-01", "2024-02", "2024-03"):
+        got = run_voyage_summary_monthly(spark, curated, partials, summary, month)
+        want = _semi_join_summary(spark.read.parquet(partials), month)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), month
+    # voyage 1 (Jan 31 only) survived the Feb run's rewrite of its start date
+    assert spark.read.parquet(summary).count() == 7

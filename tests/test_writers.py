@@ -804,3 +804,16 @@ def test_write_versioned_rejects_nonpositive_heartbeat(spark, tmp_path):
             str(tmp_path / "vt"),
             heartbeat_ms=0,
         )
+
+
+def test_state_snapshot_missing_or_empty_dir_is_empty(spark, tmp_path):
+    """No existence probe is needed: a missing snapshot directory and one
+    holding only a _SUCCESS marker both fall back to the empty typed
+    frame."""
+    prefix = tmp_path / "state"
+    (prefix / "by_date=2024-01-02").mkdir(parents=True)
+    (prefix / "by_date=2024-01-02" / "_SUCCESS").write_text("")
+    for date in ("2024-01-01", "2024-01-02"):
+        got = read_state_snapshot_by_date(spark, str(prefix), date, STATE_SNAPSHOT_SCHEMA)
+        assert got.schema == STATE_SNAPSHOT_SCHEMA
+        assert got.count() == 0
