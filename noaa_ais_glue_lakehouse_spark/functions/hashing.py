@@ -4,11 +4,15 @@ Reference parity:
 
 - D1 content-hash dedup (``utils/common_functions_raw.py:198-219``) hashes
   ``sha2(to_json(struct(*cols)), 256)``. That spec is ambiguous (``to_json``
-  drops null fields, so null-vs-absent collide — SURVEY §2.8). Here the
-  canonical hash pins column order and null handling explicitly via
-  ``concat_ws`` over null-coalesced string casts, which is deterministic and
-  replay-stable. ``content_hash_sha256`` keeps the exact reference recipe for
-  parity; ``content_fingerprint`` is the fixed spec.
+  drops null fields, so null-vs-absent collide — SURVEY §2.8). The
+  raw→staging pipeline no longer hashes at all: its D1
+  (``operators/cleaning.dedup_by_content_hash``) groups on the row's own
+  columns, with the same groups as this key. ``content_hash_sha256`` stays
+  as the reference recipe that equivalence is tested against.
+  ``content_fingerprint`` is the fixed spec for tables that need a stored
+  row key: it pins column order and null handling explicitly via
+  ``concat_ws`` over null-coalesced string casts, which is deterministic
+  and replay-stable.
 
 MinHash / SimHash extend the same dedup surface to near-duplicates for
 training-data curation (SURVEY §7.2 phase 9). Everything is built from
@@ -26,8 +30,9 @@ _NULL_SENTINEL = " <NULL> "
 def content_hash_sha256(cols: list[str]) -> Column:
     """The reference's exact D1 recipe: sha2(to_json(struct(cols)), 256).
 
-    Kept for parity; prefer :func:`content_fingerprint` for new tables
-    (to_json silently drops null fields, so {"a":null} and {} collide).
+    Kept for parity (the D1 dedup is tested against it); prefer
+    :func:`content_fingerprint` for new tables (to_json silently drops
+    null fields, so {"a":null} and {} collide).
     """
     return F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256)
 

@@ -3,7 +3,7 @@
 Each function is a pure ``DataFrame -> DataFrame`` transformer mirroring one
 reference operator (citations into /root/reference). Semantics are preserved
 exactly — including deliberate quirks flagged in SURVEY §7.4 (upper-bound-only
-clamps, 3-format timestamp coalesce) — so oracle outputs match.
+clamps, the 3-format timestamp parse) — so oracle outputs match.
 """
 
 from __future__ import annotations
@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from noaa_ais_glue_lakehouse_spark.functions.hashing import content_hash_sha256
 
 # reference: utils/column_mapping.py:6-21 — source-drift rename map
 COLUMN_MAPPING: dict[str, str] = {
@@ -33,6 +31,29 @@ COLUMN_MAPPING: dict[str, str] = {
 }
 
 
+def _q(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def with_sql_columns(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """``withColumns`` for SQL expression strings, built as one ``selectExpr``.
+
+    The cleaning chain's per-column projections are written as SQL strings:
+    each Column function call costs the driver a few JVM round trips, a SQL
+    string one, and with one Column per column the chain spent ~0.35 s per
+    call building its plan. Replaced columns keep their position; new ones
+    are appended in ``exprs`` order.
+    """
+    out = [f"{exprs[c]} AS {_q(c)}" if c in exprs else _q(c) for c in df.columns]
+    out += [f"{e} AS {_q(c)}" for c, e in exprs.items() if c not in df.columns]
+    return df.selectExpr(*out)
+
+
+def _canonical_name(name: str, mapping: dict[str, str]) -> str:
+    return mapping.get(name.lower(), name) if name not in mapping.values() else name
+
+
 def normalize_columns(df: DataFrame, mapping: dict[str, str] | None = None) -> DataFrame:
     """P1 — rename drifted source columns to canonical names.
 
@@ -40,29 +61,38 @@ def normalize_columns(df: DataFrame, mapping: dict[str, str] | None = None) -> D
     with aliases (one projection, not N withColumnRenamed nodes).
     """
     mapping = mapping or COLUMN_MAPPING
-    cols = []
-    for c in df.columns:
-        target = mapping.get(c.lower(), c) if c not in mapping.values() else c
-        cols.append(F.col(c).alias(target))
-    return df.select(*cols)
+    return df.selectExpr(*[f"{_q(c)} AS {_q(_canonical_name(c, mapping))}" for c in df.columns])
+
+
+def _aligned(src: str | None, dtype: T.DataType) -> str:
+    # SQL's bare TIMESTAMP follows spark.sql.timestampType; the declared type
+    # is the session-independent TIMESTAMP_LTZ
+    sql_type = "timestamp_ltz" if isinstance(dtype, T.TimestampType) else dtype.simpleString()
+    # try_cast, not cast: under ANSI (Spark 4's default) one malformed
+    # number would abort the whole job; the reference ran with ANSI off,
+    # where it becomes NULL
+    return f"CAST(NULL AS {sql_type})" if src is None else f"try_cast({_q(src)} AS {sql_type})"
+
+
+def _null_if_empty(sql: str) -> str:
+    return f"nullif({sql}, '')"
 
 
 def align_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """P2 — add missing expected columns as typed nulls, drop extras,
-    cast-by-name to the declared type (never positional).
+    cast-by-name to the declared type (never positional). A value that
+    does not parse as the declared type becomes NULL.
 
     Reference: ``pipelines/raw_to_staging.py:91-106`` + the LAT/LON-swap
     post-mortem (``docs/03-raw-to-staging-postmortem-2025.md:75-100``).
     """
     present = {c.lower(): c for c in df.columns}
-    out = []
-    for field in schema.fields:
-        src = present.get(field.name.lower())
-        if src is None:
-            out.append(F.lit(None).cast(field.dataType).alias(field.name))
-        else:
-            out.append(F.col(src).cast(field.dataType).alias(field.name))
-    return df.select(*out)
+    return df.selectExpr(
+        *[
+            f"{_aligned(present.get(f.name.lower()), f.dataType)} AS {_q(f.name)}"
+            for f in schema.fields
+        ]
+    )
 
 
 def replace_empty_with_null(df: DataFrame) -> DataFrame:
@@ -70,22 +100,46 @@ def replace_empty_with_null(df: DataFrame) -> DataFrame:
 
     Reference: ``utils/common_functions_raw.py:117-127``.
     """
-    exprs = []
-    for field in df.schema.fields:
-        if isinstance(field.dataType, T.StringType):
-            c = F.col(field.name)
-            exprs.append(F.when(c == "", None).otherwise(c).alias(field.name))
-        else:
-            exprs.append(F.col(field.name))
-    return df.select(*exprs)
+    strings = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
+    return with_sql_columns(df, {c: _null_if_empty(_q(c)) for c in strings})
 
 
-# reference: utils/common_functions_raw.py:28-37 — accepted timestamp formats
+def conform_raw_columns(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """P1→P3 as one projection: each declared column is the renamed
+    source column, cast by name, with '' -> NULL on strings — the same
+    rows as ``replace_empty_with_null(align_schema(normalize_columns(df),
+    schema))``, built as one ``select`` instead of three.
+
+    Two source columns that rename to one declared column are an error
+    here, as the ambiguous reference is in the three-step form.
+    """
+    wanted = {f.name.lower() for f in schema.fields}
+    present: dict[str, str] = {}
+    for c in df.columns:
+        key = _canonical_name(c, COLUMN_MAPPING).lower()
+        if key in wanted and key in present:
+            raise ValueError(f"source columns {present[key]!r} and {c!r} both map to {key!r}")
+        present[key] = c
+    out = []
+    for f in schema.fields:
+        sql = _aligned(present.get(f.name.lower()), f.dataType)
+        if isinstance(f.dataType, T.StringType):
+            sql = _null_if_empty(sql)
+        out.append(f"{sql} AS {_q(f.name)}")
+    return df.selectExpr(*out)
+
+
+# reference: utils/common_functions_raw.py:28-37 — accepted timestamp
+# formats, each behind a gate that every string it parses matches (Spark's
+# parser takes a leading '-' on the year, any case of 'T', and 1-3 fraction
+# digits for .SSS; every field is fixed width, ASCII digits only)
 _TS_FORMATS = [
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss.SSS",
+    ("yyyy-MM-dd HH:mm:ss", r"^-?\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}$"),
+    ("yyyy-MM-dd'T'HH:mm:ss", r"^-?\d{4}-\d{2}-\d{2}[Tt]\d{2}:\d{2}:\d{2}$"),
+    ("yyyy-MM-dd'T'HH:mm:ss.SSS", r"^-?\d{4}-\d{2}-\d{2}[Tt]\d{2}:\d{2}:\d{2}\.\d{1,3}$"),
 ]
+
+_PARTITION_FORMATS = {"year": "yyyy", "month": "MM", "day": "dd"}
 
 
 def parse_base_datetime(
@@ -94,23 +148,34 @@ def parse_base_datetime(
     drop_unparseable: bool = True,
     derive_partitions: bool = True,
 ) -> DataFrame:
-    """P4 — strip trailing Z/offset, 3-format to_timestamp coalesce, drop
-    unparseable rows, derive zero-padded year/month/day partition strings.
+    """P4 — strip trailing Z/offset, parse with the first of 3 formats
+    that accepts the string, drop unparseable rows, derive zero-padded
+    year/month/day partition strings.
 
-    Reference: ``utils/common_functions_raw.py:20-50``.
+    Reference: ``utils/common_functions_raw.py:20-50``, which tries the
+    formats in order (a 3-way ``coalesce``). The three formats accept
+    disjoint sets of strings, so here each row goes by its shape (one
+    ``rlike`` gate per format) to the only format that can accept it, and
+    runs at most one parse: the same timestamps, without the failed
+    attempts. ``tests/test_cleaning.py`` pins the equality against the
+    coalesce row by row.
     """
     stripped = F.regexp_replace(
         F.regexp_replace(F.col(col), r"Z$", ""), r"[+-]\d{2}:\d{2}$", ""
     )
-    parsed = F.coalesce(*[F.try_to_timestamp(stripped, F.lit(fmt)) for fmt in _TS_FORMATS])
+    branches = [
+        (stripped.rlike(gate), F.try_to_timestamp(stripped, F.lit(fmt)))
+        for fmt, gate in _TS_FORMATS
+    ]
+    parsed = F.when(*branches[0])
+    for gate, value in branches[1:]:
+        parsed = parsed.when(gate, value)
     out = df.withColumn(col, parsed)
     if drop_unparseable:
-        out = out.filter(F.col(col).isNotNull())
+        out = out.filter(f"{_q(col)} IS NOT NULL")
     if derive_partitions:
-        out = (
-            out.withColumn("year", F.date_format(col, "yyyy"))
-            .withColumn("month", F.date_format(col, "MM"))
-            .withColumn("day", F.date_format(col, "dd"))
+        out = with_sql_columns(
+            out, {p: f"date_format({_q(col)}, '{fmt}')" for p, fmt in _PARTITION_FORMATS.items()}
         )
     return out
 
@@ -123,8 +188,9 @@ def clean_coordinates(
     Returns both halves; the caller routes invalid to the quarantine sink
     (S6). Reference: ``utils/common_functions_raw.py:58-100``.
     """
-    cond = F.col(lat_col).between(-90.0, 90.0) & F.col(lon_col).between(-180.0, 180.0)
-    return df.filter(cond), df.filter(~cond | F.col(lat_col).isNull() | F.col(lon_col).isNull())
+    lat, lon = _q(lat_col), _q(lon_col)
+    cond = f"{lat} BETWEEN -90.0D AND 90.0D AND {lon} BETWEEN -180.0D AND 180.0D"
+    return df.filter(cond), df.filter(f"NOT ({cond}) OR {lat} IS NULL OR {lon} IS NULL")
 
 
 def detect_swapped_coordinates(df: DataFrame, lat_col: str = "LAT", lon_col: str = "LON") -> bool:
@@ -151,15 +217,16 @@ def clean_sog_cog_heading(
 
     Reference: ``utils/common_functions_raw.py:103-114``.
     """
-    out = df
-    for c, hi in ((sog_col, 100.0), (cog_col, 360.0), (heading_col, 511.0)):
-        if c in out.columns:
-            # when/otherwise (not least): least() ignores NULLs, which would
-            # turn a NULL reading into the cap and flip MovementFlag downstream.
-            out = out.withColumn(
-                c, F.when(F.col(c) > hi, F.lit(hi)).otherwise(F.col(c))
-            )
-    return out
+    # CASE (not least): least() ignores NULLs, which would turn a NULL
+    # reading into the cap and flip MovementFlag downstream.
+    return with_sql_columns(
+        df,
+        {
+            c: f"CASE WHEN {_q(c)} > {hi}D THEN {hi}D ELSE {_q(c)} END"
+            for c, hi in ((sog_col, 100.0), (cog_col, 360.0), (heading_col, 511.0))
+            if c in df.columns
+        },
+    )
 
 
 def derive_movement_flag(df: DataFrame, sog_col: str = "SOG") -> DataFrame:
@@ -167,9 +234,12 @@ def derive_movement_flag(df: DataFrame, sog_col: str = "SOG") -> DataFrame:
 
     Reference: ``utils/common_functions_raw.py:152-159``.
     """
-    return df.withColumn(
-        "MovementFlag", F.when(F.col(sog_col) > 0, 1).otherwise(0).cast("int")
-    )
+    return with_sql_columns(df, {"MovementFlag": movement_flag(sog_col)})
+
+
+def movement_flag(sog_col: str = "SOG") -> str:
+    """The ``derive_movement_flag`` column on its own, as SQL."""
+    return f"CAST(CASE WHEN {_q(sog_col)} > 0 THEN 1 ELSE 0 END AS INT)"
 
 
 def add_movement_state(df: DataFrame, sog_col: str = "SOG", threshold: float = 0.5) -> DataFrame:
@@ -187,16 +257,45 @@ def movement_state(sog_col: str = "SOG", threshold: float = 0.5) -> Column:
 
 
 def dedup_by_content_hash(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """D1 — content-hash dedup: sha2(to_json(struct(cols)),256) →
-    dropDuplicates → drop key.
+    """D1 — exact-row dedup on ``cols``: one row per distinct content.
 
-    Reference: ``utils/common_functions_raw.py:198-219``. The hash column set
-    is pinned by the caller (SURVEY §7.4.6) — defaults to all columns in
-    current order, matching the reference's behavior at its call site.
+    Reference: ``utils/common_functions_raw.py:198-219``, which keys each
+    row by ``sha2(to_json(struct(cols)), 256)`` and drops duplicate keys.
+    The column set is pinned by the caller (SURVEY §7.4.6) and defaults to
+    all columns in current order, matching the reference's call site.
+
+    Here the rows group on their own columns, so the dedup plans as one
+    hash aggregate with no aggregate buffers: no sort, no per-row JSON,
+    no 64-character key in the shuffle. The groups are the reference
+    key's groups:
+
+    - NULL and '' stay apart in both, and every NaN is one value in both;
+    - ``to_json`` keeps -0.0 and 0.0 apart while Spark's grouping merges
+      them, so each float column in ``cols`` adds a sign-of-zero flag to
+      the key (set only where the value is 0), and the sign is put back on
+      the output value, which the grouping normalizes to 0.0;
+    - ``to_json`` prints timestamps to the millisecond, so the reference
+      merges timestamps that differ below it and this grouping does not.
+      P4's formats carry at most 3 fraction digits, so on the pipeline's
+      rows the two agree.
+
+    ``cols`` must be groupable types (no MAP). With a ``cols`` subset any
+    one row of each group is kept, as in the reference.
     """
     cols = cols or df.columns
-    key = "_content_hash"
-    return df.withColumn(key, content_hash_sha256(cols)).dropDuplicates([key]).drop(key)
+    types = dict(df.dtypes)
+    floats = [c for c in cols if types[c] in ("double", "float")]
+    flags = {c: f"_neg_zero_{i}" for i, c in enumerate(floats)}
+    # pow(-0.0, -1) is -inf: 1/c would say the same but raises under ANSI,
+    # and Spark's atan2 adds 0.0 to its arguments, which erases the sign
+    flagged = with_sql_columns(
+        df, {f: f"CASE WHEN {_q(c)} = 0 THEN pow({_q(c)}, -1) < 0 END" for c, f in flags.items()}
+    )
+    deduped = flagged.dropDuplicates([*cols, *flags.values()])
+    signed = with_sql_columns(
+        deduped, {c: f"CASE WHEN {f} THEN -{_q(c)} ELSE {_q(c)} END" for c, f in flags.items()}
+    )
+    return signed.drop(*flags.values())
 
 
 def safe_cast_columns(df: DataFrame, type_map: dict[str, str]) -> DataFrame:

@@ -103,9 +103,10 @@ def write_partitioned_parquet(
     this write's rows live there); None for the pass-through modes.
     """
     if mode != "overwrite" or not partition_cols:
-        spark = df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+        # a per-write option, so the caller's session conf is left as it was
+        df.write.mode(mode).option("partitionOverwriteMode", "dynamic").partitionBy(
+            *partition_cols
+        ).parquet(path)
         return None
     import uuid
 
@@ -174,15 +175,18 @@ def write_quarantine(
     n = bounded_count(df, small_threshold)
     if n == 0:
         return 0
-    # dynamic overwrite here too — without it, a vanilla session's first
-    # quarantine write would truncate ALL prior days' quarantined rows
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = df.coalesce(1) if n <= small_threshold else df
     # exact row count rides the write job via observe() (the bounded count
     # above only decides the coalesce and may stop at threshold+1)
     obs = Observation("quarantine")
     out = out.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    writer = out.write.mode("overwrite").option("header", True)
+    # dynamic overwrite here too — without it, a vanilla session's first
+    # quarantine write would truncate ALL prior days' quarantined rows
+    writer = (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("header", True)
+    )
     if parts:
         writer = writer.partitionBy(*parts)
     writer.csv(path)
@@ -399,10 +403,9 @@ def delete_keys_partition_scoped(
             clause = tuple_pred(row)
             spred = clause if spred is None else (spred | clause)
         kept_surviving = df.filter(spred).join(key_df, key_col, "left_anti")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        kept_surviving.write.mode("overwrite").partitionBy(
-            *partition_cols
-        ).parquet(path)
+        kept_surviving.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*partition_cols).parquet(path)
     return len(affected)
 
 

@@ -75,6 +75,35 @@ def test_run_raw_to_staging_files(spark, tmp_path):
     assert got.first()["year"] == 2024
 
 
+def test_run_raw_to_staging_non_numeric_values_become_null(spark, tmp_path):
+    """A malformed number nulls its field instead of aborting the drop
+    (under ANSI a cast raised CAST_INVALID_INPUT): a NULL MMSI is counted,
+    a NULL LAT goes to quarantine, a NULL Heading is kept."""
+    rows = [
+        ("N/A", "2024-01-01 10:00:00", "10.0", "20.0", "5.0", "90.0", "91.0"),
+        ("103", "2024-01-01 10:05:00", "abc", "20.0", "1.0", "1.0", "1.0"),
+        ("104", "2024-01-01 10:10:00", "11.0", "21.0", "1.0", "1.0", "x"),
+    ]
+    src = _write_csv(tmp_path / "raw.csv", _RAW_COLS, rows)
+    out = str(tmp_path / "staging")
+    counters = run_raw_to_staging(spark, src, out, str(tmp_path / "q"))
+    assert counters == {"rows_written": 2, "null_mmsi": 1, "quarantined": 1}
+    assert {r["MMSI"]: r["Heading"] for r in spark.read.parquet(out).collect()} == {
+        None: 91.0,
+        104: None,
+    }
+
+
+def test_staging_dedup_plans_as_one_hash_aggregate(spark):
+    """D1 groups on the row's own columns: a buffer-free hash aggregate, no
+    sort, no sha2 key (the sha2 recipe planned two SortAggregates)."""
+    staging, _ = transform_raw_to_staging(spark.createDataFrame(_raw_rows(), _RAW_COLS))
+    plan = staging._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan
+    assert "SortAggregate" not in plan and "sha2" not in plan
+    assert not re.search(r"\bSort \[", plan)
+
+
 def _drifted_rows(n):
     """A drifted drop: renamed columns, no Heading, an extra column, mixed
     timestamp formats over two days, bad timestamps, out-of-range

@@ -64,6 +64,24 @@ def test_quarantine_partition_aware(spark, tmp_path):
     assert os.path.isdir(out + "/year=2024/month=1/day=2")
 
 
+def test_quarantine_write_leaves_session_conf_unchanged(spark, tmp_path):
+    """Dynamic overwrite is a per-write option: a second day keeps the
+    first under a STATIC session, and the session conf is not touched."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "q")
+        for day in (1, 2):
+            df = spark.createDataFrame([(day, 2024, 1, day)], ["v", "year", "month", "day"])
+            assert write_quarantine(df, out) == 1
+        assert spark.conf.get(key) == "static"
+        assert os.path.isdir(out + "/year=2024/month=1/day=1")
+        assert os.path.isdir(out + "/year=2024/month=1/day=2")
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_quarantine_empty_writes_nothing(spark, tmp_path):
     out = str(tmp_path / "q")
     df = spark.createDataFrame([], "v int, year int, month int, day int")
