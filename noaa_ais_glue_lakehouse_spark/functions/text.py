@@ -49,11 +49,6 @@ def char_ngrams(text: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def token_count(text: Column) -> Column:
-    """Number of whitespace tokens (long)."""
-    return F.size(tokenize(text)).cast("long")
-
-
 # Subword-ish lexer classes: letter runs, digit runs, single punctuation.
 # Approximates a BPE pre-tokenizer's split points with a pattern that is
 # identical in Java regex (Spark) and RE2 (DuckDB) so oracles match.

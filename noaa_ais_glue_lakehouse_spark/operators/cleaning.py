@@ -146,7 +146,6 @@ def parse_base_datetime(
     df: DataFrame,
     col: str = "BaseDateTime",
     drop_unparseable: bool = True,
-    derive_partitions: bool = True,
 ) -> DataFrame:
     """P4 — strip trailing Z/offset, parse with the first of 3 formats
     that accepts the string, drop unparseable rows, derive zero-padded
@@ -173,11 +172,9 @@ def parse_base_datetime(
     out = df.withColumn(col, parsed)
     if drop_unparseable:
         out = out.filter(f"{_q(col)} IS NOT NULL")
-    if derive_partitions:
-        out = with_sql_columns(
-            out, {p: f"date_format({_q(col)}, '{fmt}')" for p, fmt in _PARTITION_FORMATS.items()}
-        )
-    return out
+    return with_sql_columns(
+        out, {p: f"date_format({_q(col)}, '{fmt}')" for p, fmt in _PARTITION_FORMATS.items()}
+    )
 
 
 def clean_coordinates(

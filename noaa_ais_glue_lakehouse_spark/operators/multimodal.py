@@ -16,8 +16,7 @@ Conventions (the brief's training-data-pipeline surface):
   to a clearly-marked deterministic stub with the same schema.
 
 Scale notes: binary payloads ride in the row — never ``collect()`` them;
-metadata extraction is a narrow map (no shuffle); fingerprint dedup
-reuses the exact-dedup shuffle shape (hash groupBy on the digest).
+metadata extraction is a narrow map (no shuffle).
 ``mapInPandas`` transfers batches via Arrow, so the per-row Python cost
 is amortized across ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 """
@@ -58,19 +57,6 @@ def binary_metadata(
         df.withColumn(f"{out_prefix}bytes", F.length(b).cast("long"))
         .withColumn(f"{out_prefix}fingerprint", F.md5(b))
         .withColumn(f"{out_prefix}format", fmt)
-    )
-
-
-def dedup_binary_exact(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
-    """Exact binary dedup keeping the min-id row per digest — single
-    min_by shuffle (payload rows are the heaviest in the system; the
-    groupBy + join-back form would shuffle them twice)."""
-    keyed = df.withColumn("_fp", F.md5(F.col(binary_col)))
-    row = F.struct(*[F.col(c) for c in df.columns])
-    return (
-        keyed.groupBy("_fp")
-        .agg(F.min_by(row, F.col(id_col)).alias("_row"))
-        .select("_row.*")
     )
 
 

@@ -76,8 +76,6 @@ def spread_partitions(df: DataFrame) -> DataFrame:
     scan already has at least ``defaultParallelism`` partitions (always
     true at 100 TB), the DataFrame is returned unchanged and no shuffle
     is added where shuffling raw text would actually cost something.
-    Reachable from the reader via ``read_parquet_table(...,
-    spread_small_scans=True)``.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -158,9 +156,12 @@ def global_running_sum(
     before-plan holds two full scan→sessionize→window copies). cache()
     runs it once; it also pins ONE sampled range partitioning, so the
     broadcast offsets provably describe the same _pid layout the main
-    stream carries (two separate evaluations only agreed because the
-    range sampler is seeded deterministically). Pass False to keep the
-    plan fully lazy.
+    stream carries. Pass False to keep the plan fully lazy — but the
+    uncached path is correct ONLY while Spark reuses the range exchange
+    for both references: with exchange reuse off, the two evaluations
+    partition independently and the offsets no longer line up with
+    ``_pid`` (1M rows, 8 partitions: 742,044 wrong running sums).
+    Computing the range bounds once is ROADMAP open item 1.
 
     ``"auto"`` (round 11, verdict ask #3 — the default): cache only when
     the optimizer's size estimate for the local stream fits the storage
@@ -170,9 +171,9 @@ def global_running_sum(
     recomputed (medians of 3; caching a stream that spills costs the
     materialization barrier AND a disk round-trip, where recompute is one
     extra pass over a cheap upstream). An unknown estimate counts as
-    too-big — recompute is always correct, a spilled full-dataset copy at
-    100 TB is not survivable. The cache itself is registered in the
-    bounded query-cache registry either way.
+    too-big — a spilled full-dataset copy at 100 TB is not survivable,
+    and recompute carries the exchange-reuse caveat above. The cache
+    itself is registered in the bounded query-cache registry either way.
     """
     cols = [F.col(c) for c in order_cols]
     part = (

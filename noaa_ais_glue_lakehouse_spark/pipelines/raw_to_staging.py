@@ -36,7 +36,6 @@ from __future__ import annotations
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from noaa_ais_glue_lakehouse_spark.operators.cleaning import (
     clean_coordinates,
@@ -57,7 +56,7 @@ from noaa_ais_glue_lakehouse_spark.sources.writers import (
 PARTITION_COLS = ["year", "month", "day"]
 
 
-def parse_raw(df: DataFrame, schema: T.StructType | None = None) -> DataFrame:
+def parse_raw(df: DataFrame) -> DataFrame:
     """P1→P4: the prefix both outputs share — normalize, schema-align and
     empty→null as one projection, then the timestamp parse and the
     year/month/day strings. Unparseable rows keep a NULL ``BaseDateTime``
@@ -65,7 +64,7 @@ def parse_raw(df: DataFrame, schema: T.StructType | None = None) -> DataFrame:
     be pushed below it by the optimizer and run it twice per row, while
     above the runner's persisted prefix it reads one cached column."""
     return parse_base_datetime(
-        conform_raw_columns(df, schema or AIS_RAW_SCHEMA), drop_unparseable=False
+        conform_raw_columns(df, AIS_RAW_SCHEMA), drop_unparseable=False
     )
 
 
@@ -81,16 +80,14 @@ def split_and_clean(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     return valid, with_sql_columns(invalid, as_int)
 
 
-def transform_raw_to_staging(
-    df: DataFrame, schema: T.StructType | None = None
-) -> tuple[DataFrame, DataFrame]:
+def transform_raw_to_staging(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """P1→P7 + D1 over a raw-zone DataFrame → (staging, quarantine).
 
     Pure function: no IO, no session access — unit-testable on literal
     DataFrames exactly like the reference's integration slice
     (``tests/integration/test_integration_pipeline.py:11-35``).
     """
-    return split_and_clean(parse_raw(df, schema))
+    return split_and_clean(parse_raw(df))
 
 
 def run_raw_to_staging(
@@ -98,7 +95,6 @@ def run_raw_to_staging(
     input_path: str,
     output_path: str,
     quarantine_path: str | None = None,
-    schema: T.StructType | None = None,
 ) -> dict[str, int]:
     """Read raw CSV, clean, write partitioned staging parquet (+quarantine).
 
@@ -113,7 +109,7 @@ def run_raw_to_staging(
     raw = read_csv_with_header(spark, input_path)
     # both outputs branch off the parse: persisted so the bounded count and
     # the two writes share one scan (see "Scale" above)
-    parsed = parse_raw(raw, schema).persist(StorageLevel.MEMORY_AND_DISK)
+    parsed = parse_raw(raw).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         staging, quarantine = split_and_clean(parsed)
         n_quarantined = (

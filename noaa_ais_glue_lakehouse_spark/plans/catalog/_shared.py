@@ -507,8 +507,7 @@ def _spread(df: DataFrame) -> DataFrame:
     the raw text would actually cost something.
 
     Round 7: delegates to the library operator (promoted per round-6
-    verdict) so user pipelines get the same fix — also reachable via
-    ``read_parquet_table(..., spread_small_scans=True)``."""
+    verdict) so user pipelines get the same fix."""
     from noaa_ais_glue_lakehouse_spark.operators.ordering import (
         spread_partitions,
     )

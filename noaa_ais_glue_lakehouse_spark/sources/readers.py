@@ -1,4 +1,4 @@
-"""Readers (SURVEY §2.1 S1-S3, S8).
+"""Readers (SURVEY §2.1 S1-S3).
 
 ``read_table`` is the canonical parquet table reader: a plain
 ``spark.read.parquet`` over the table root — partition pruning and filter
@@ -22,7 +22,6 @@ def read_parquet_table(
     spark: SparkSession,
     path: str,
     ns_ts_cols: tuple[str, ...] = ("ts",),
-    spread_small_scans: bool = False,
 ) -> DataFrame:
     """Parquet scan with ns-timestamp normalization.
 
@@ -30,15 +29,6 @@ def read_parquet_table(
     they arrive as LongType (nanos since epoch) under the nanosAsLong conf
     and are converted to micros timestamps here. Columns already read as
     timestamps are left untouched, so the same reader works on us/ms files.
-
-    ``spread_small_scans=True`` applies
-    :func:`~noaa_ais_glue_lakehouse_spark.operators.ordering.spread_partitions`
-    — a round-robin repartition to ``defaultParallelism`` ONLY when the
-    scan produced fewer partitions (a table fitting one parquet split
-    otherwise runs all downstream row-local compute in one task; 3–12×
-    measured on gram/hash-heavy pipelines). At scale the scan already
-    has more splits than cores and the flag is a guaranteed no-op, so
-    it is safe to leave on for compute-bound pipelines.
     """
     # Runtime-settable; must be applied here (not only at session build) because
     # callers may pass in an externally built SparkSession that never went
@@ -76,18 +66,10 @@ def read_parquet_table(
             # spark.sql.timestampType and silently stay NTZ on sessions that
             # set it.
             df = df.withColumn(c, F.col(c).cast(T.TimestampType()))
-    if spread_small_scans:
-        from noaa_ais_glue_lakehouse_spark.operators.ordering import (
-            spread_partitions,
-        )
-
-        df = spread_partitions(df)
     return df
 
 
-def read_csv_with_header(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
+def read_csv_with_header(spark: SparkSession, path: str) -> DataFrame:
     """S1 — header-driven CSV source, inference disabled.
 
     Header names are authoritative (cast-by-name downstream) — the
@@ -112,25 +94,19 @@ def read_parquet_enforced(
         df.schema  # force analysis
         return df
     except Exception:
-        df = spark.read.parquet(path)
-        cols = [
+        return cast_to_schema(spark.read.parquet(path), schema)
+
+
+def cast_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Cast-by-name to a declared schema: each declared column cast to
+    its declared type, a missing one NULL of that type, extra columns
+    dropped. Unlike an enforced read it never throws on physical-type
+    drift (e.g. INT64 ids written against an INT32 declaration)."""
+    return df.select(
+        *[
             F.col(f.name).cast(f.dataType).alias(f.name)
             if f.name in df.columns
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in schema.fields
         ]
-        return df.select(*cols)
-
-
-def read_state_snapshot(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """S8 — state-snapshot source with empty-DataFrame fallback when the
-    snapshot dir is absent (first run). Reference: ``utils/state_io.py:14-29``.
-    """
-    try:
-        df = spark.read.schema(schema).parquet(path)
-        df.head(1)
-        return df
-    except Exception:
-        return spark.createDataFrame([], schema)
+    )

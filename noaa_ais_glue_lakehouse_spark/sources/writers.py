@@ -7,12 +7,13 @@ hold state. Scale stance:
   partition overwrite means a rerun replaces exactly the partitions it
   produced and never truncates the table (the reference's safety net,
   ``pipelines/raw_to_staging.py:23,172-178``).
-- Window-scoped overwrite implements the *semantics* the reference
+- Window-scoped overwrite (S5) implements the *semantics* the reference
   intended with its Delta-only ``replaceWhere`` option that the plain
   parquet writer silently ignored (``fact_voyage_trajectory.py:342-356``,
-  SURVEY §7.4.2): the input is filtered to the window predicate so the
-  dynamic overwrite can only ever touch the window's partitions. On a
-  Delta-enabled cluster, swap the body for
+  SURVEY §7.4.2) without a sink of its own: ``run_trajectory_window``
+  filters its input to the window's ``BaseDateTime`` range, so the
+  partitioned sink below can only ever replace the window's partitions.
+  On a Delta-enabled cluster, the same write is
   ``.format("delta").option("replaceWhere", predicate)``.
 - Quarantine is partition-aware per row (fixes SURVEY §7.4.5, where the
   reference stamped the whole quarantine write with ``df.first()``'s
@@ -24,6 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from noaa_ais_glue_lakehouse_spark.sources.readers import (
+    cast_to_schema,
+    read_parquet_table,
+)
 
 
 def bounded_count(df: DataFrame, threshold: int) -> int:
@@ -85,7 +91,7 @@ def write_partitioned_parquet(
 ) -> list[str] | None:
     """S4 — partitioned parquet sink with dynamic-partition-overwrite
     SEMANTICS (only partitions present in ``df`` are replaced), made
-    CRASH-SAFE via the same stage-then-swap as the S5 window sink.
+    CRASH-SAFE via stage-then-swap.
 
     Reference: ``pipelines/raw_to_staging.py:172-178`` +
     ``partitionOverwriteMode=dynamic`` at ``:23``. Spark's own dynamic
@@ -114,45 +120,6 @@ def write_partitioned_parquet(
     staging = f"{path.rstrip('/')}/.staging-{uuid.uuid4().hex}"
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
     return _swap_staged_partitions(spark, staging, path, partition_cols)
-
-
-def write_window_overwrite(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    window_predicate,
-) -> None:
-    """S5 — overwrite only the partitions inside the window predicate,
-    CRASH-SAFE via stage-then-swap.
-
-    The filter guarantees no row outside the window exists in the input,
-    so only window partitions can be replaced — the correct form of the
-    reference's no-op ``replaceWhere`` on a parquet writer
-    (``fact_voyage_trajectory.py:354-355``; SURVEY §4 "window-scoped
-    overwrite"). ``window_predicate`` is a boolean Column.
-
-    Two-phase commit (the JSONL sink's stage-then-publish pattern applied
-    to parquet): the WRITE JOB — the long, failure-prone phase — lands in
-    a hidden ``.staging-<token>`` directory and never touches published
-    data; only after it succeeds does each staged partition directory
-    swap into place with a filesystem rename. A crash any time during the
-    write leaves every published partition intact and readable (pinned by
-    a kill-mid-write test). The swap phase itself is one rename per
-    partition — metadata-only and near-instant, the parquet-native
-    approximation of Delta's transactional ``replaceWhere`` (SURVEY
-    §7.3's named upgrade path); a crash between renames leaves each
-    partition either fully-old or fully-new, never mixed, and the
-    leftover staging directory (dot-prefixed, ignored by parquet
-    readers) is re-swappable or deletable on re-run.
-    """
-    import uuid
-
-    spark = df.sparkSession
-    staging = f"{path.rstrip('/')}/.staging-{uuid.uuid4().hex}"
-    df.filter(window_predicate).write.mode("overwrite").partitionBy(
-        *partition_cols
-    ).parquet(staging)
-    _swap_staged_partitions(spark, staging, path, partition_cols)
 
 
 def write_quarantine(
@@ -220,17 +187,9 @@ def read_state_snapshot_by_date(
     except Exception:
         return spark.createDataFrame([], schema)
     # cast-by-name to the declared schema rather than an enforced read:
-    # an enforced read THROWS on physical-type drift (e.g. an INT64 MMSI
-    # written by a caller with wider ids vs the INT32 declaration), and
-    # treating that as "no snapshot" would silently reset every entity's
-    # state — the S2 fallback semantics apply here too.
-    cols = [
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        if f.name in raw.columns
-        else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in schema.fields
-    ]
-    return raw.select(*cols)
+    # an enforced read THROWS on physical-type drift, and treating that as
+    # "no snapshot" would silently reset every entity's state
+    return cast_to_schema(raw, schema)
 
 
 def write_bucketed_table(
@@ -277,8 +236,6 @@ def register_table_views(
     ``athena_ddl_scripts/athena_external_tables.sql:14-131``; no MSCK
     needed — the view reads the table root and Catalyst prunes).
     """
-    from noaa_ais_glue_lakehouse_spark.sources.readers import read_parquet_table
-
     for t in tables:
         read_parquet_table(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
@@ -323,8 +280,6 @@ def delete_keys_partition_scoped(
     operation is idempotent, so a failed run must simply be re-run to
     complete the purge (the re-run re-detects the remaining keys).
     """
-    from pyspark.sql import functions as F
-
     if not keys:
         return 0
     df = spark.read.parquet(path)
@@ -342,17 +297,17 @@ def delete_keys_partition_scoped(
     if not affected:
         return 0
 
-    def tuple_pred(row) -> "F.Column":
-        clause = F.lit(True)
-        for c in partition_cols:
-            clause = clause & F.col(c).eqNullSafe(F.lit(row[c]))
-        return clause
+    def any_partition(rows) -> "F.Column":
+        """OR over the rows' partition tuples, NULL-safe per column."""
+        pred = None
+        for row in rows:
+            clause = F.lit(True)
+            for c in partition_cols:
+                clause = clause & F.col(c).eqNullSafe(F.lit(row[c]))
+            pred = clause if pred is None else (pred | clause)
+        return pred
 
-    pred = None
-    for row in affected:
-        clause = tuple_pred(row)
-        pred = clause if pred is None else (pred | clause)
-    kept = df.filter(pred).join(key_df, key_col, "left_anti")
+    kept = df.filter(any_partition(affected)).join(key_df, key_col, "left_anti")
     kept_parts = {
         tuple(r[c] for c in partition_cols)
         for r in kept.select(*partition_cols).distinct().collect()
@@ -373,14 +328,10 @@ def delete_keys_partition_scoped(
     # directory paths come from the scan itself (input_file_name reflects
     # Hive escaping exactly) — never a hand-built col=value fragment.
     if emptied:
-        epred = None
-        for row in emptied:
-            clause = tuple_pred(row)
-            epred = clause if epred is None else (epred | clause)
         from urllib.parse import unquote
 
         files = (
-            df.filter(epred)
+            df.filter(any_partition(emptied))
             .select(F.input_file_name().alias("f"))
             .distinct()
             .collect()
@@ -398,11 +349,9 @@ def delete_keys_partition_scoped(
     # predicate covers surviving partitions only, so the plan never
     # touches the directories deleted in step A.
     if surviving:
-        spred = None
-        for row in surviving:
-            clause = tuple_pred(row)
-            spred = clause if spred is None else (spred | clause)
-        kept_surviving = df.filter(spred).join(key_df, key_col, "left_anti")
+        kept_surviving = df.filter(any_partition(surviving)).join(
+            key_df, key_col, "left_anti"
+        )
         kept_surviving.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(*partition_cols).parquet(path)
@@ -434,8 +383,6 @@ def write_zordered(
     the per-file (x-span × y-span) area of a z-ordered write is a
     fraction of an arrival-order write's.
     """
-    from pyspark.sql import functions as F
-
     from noaa_ais_glue_lakehouse_spark.functions.spatial import morton_key
 
     keyed = df.withColumn("_zkey", morton_key(F.col(x_col), F.col(y_col), bits))
@@ -477,10 +424,13 @@ def _touch(fs, hpath, payload: bytes = b"") -> None:
     out.close()
 
 
-def _read_small(fs, hpath) -> bytes:
+def _read_json(fs, hpath) -> dict:
+    """Parse a small JSON file (a manifest or an in-flight marker)."""
+    import json as _json
+
     stream = fs.open(hpath)
     try:
-        return bytes(stream.readAllBytes())
+        return _json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
     finally:
         stream.close()
 
@@ -670,8 +620,6 @@ def read_version(
     the latest manifest by default, or a pinned historical ``version``
     (time travel). Raises ``ValueError`` for a version no manifest
     names (incl. orphan data dirs from crashed writers)."""
-    import json as _json
-
     fs, root, man_dir, HPath = _versioned_fs(spark, path)
     if not fs.exists(man_dir):
         raise ValueError(f"not a versioned table (no _manifests): {path}")
@@ -683,14 +631,7 @@ def read_version(
         raise ValueError(
             f"version {pick} not committed (have {sorted(versions)})"
         )
-    stream = fs.open(versions[pick])
-    try:
-        raw = bytes(
-            stream.readAllBytes()
-        )  # small JSON; Hadoop 3 API present on Spark 4
-    finally:
-        stream.close()
-    manifest = _json.loads(raw.decode("utf-8"))
+    manifest = _read_json(fs, versions[pick])
     return spark.read.parquet(f"{root.toString()}/{manifest['data_dir']}")
 
 
@@ -738,8 +679,6 @@ def vacuum_versions(
     Returns ``{"removed_versions": [...], "kept_versions": [...],
     "swept_orphans": [...], "skipped_young_orphans": [...]}``.
     """
-    import json as _json
-
     fs, root, man_dir, HPath = _versioned_fs(spark, path)
     if not fs.exists(man_dir):
         raise ValueError(f"not a versioned table (no _manifests): {path}")
@@ -748,18 +687,9 @@ def vacuum_versions(
     ordered = sorted(versions)
     kept = ordered[-keep_last:]
     removed = ordered[: -keep_last] if len(ordered) > keep_last else []
-
-    def _data_dir_of(man_path) -> str:
-        stream = fs.open(man_path)
-        try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        return _json.loads(raw.decode("utf-8"))["data_dir"]
-
-    referenced = {_data_dir_of(versions[v]) for v in kept}
+    referenced = {_read_json(fs, versions[v])["data_dir"] for v in kept}
     for v in removed:
-        data_dir = _data_dir_of(versions[v])
+        data_dir = _read_json(fs, versions[v])["data_dir"]
         if data_dir not in referenced:  # defensive: never touch kept data
             fs.delete(HPath(f"{root.toString()}/{data_dir}"), True)
         fs.delete(versions[v], False)
@@ -778,11 +708,7 @@ def vacuum_versions(
             # Empty/unreadable content (pre-round-10 marker, torn read)
             # falls back to the caller's grace alone.
             try:
-                beat_ms = int(
-                    _json.loads(
-                        _read_small(fs, st.getPath()).decode("utf-8")
-                    )["heartbeat_ms"]
-                )
+                beat_ms = int(_read_json(fs, st.getPath())["heartbeat_ms"])
                 grace = max(orphan_grace_ms, 2 * beat_ms)
             except Exception:
                 grace = orphan_grace_ms

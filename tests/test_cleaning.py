@@ -142,7 +142,7 @@ def test_parse_dispatch_equals_three_format_coalesce(spark):
     year 0 has no Python datetime."""
     corpus = _TS_CORPUS + [None] + _fuzzed_timestamps(6000, seed=15)
     df = spark.createDataFrame(list(enumerate(corpus)), "id int, BaseDateTime string")
-    got = parse_base_datetime(df, drop_unparseable=False, derive_partitions=False)
+    got = parse_base_datetime(df, drop_unparseable=False)
     got = dict(got.select("id", F.unix_micros("BaseDateTime")).collect())
     want = dict(df.select("id", F.unix_micros(_coalesce_parse(F.col("BaseDateTime")))).collect())
     diff = {corpus[i]: (got[i], want[i]) for i in want if got[i] != want[i]}

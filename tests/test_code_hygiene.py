@@ -5,6 +5,7 @@ can't silently regress them."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -285,4 +286,63 @@ def test_spark_session_built_only_in_session_factory():
     assert not offenders, (
         "SparkSession.builder outside session.py (use "
         "session.get_spark(profile=...)): " + ", ".join(offenders)
+    )
+
+
+# ---------------------------------------------------------------------------
+# dead code in the IO and pipeline layers
+# ---------------------------------------------------------------------------
+#
+# A public function in sources/ or pipelines/ that nothing runs is a second
+# way to do a job (a duplicate reader, a sink the pipelines bypass) or an
+# option nobody sets. Each must have a caller outside tests, or be named in
+# COVERAGE.md as surveyed surface with its evidence. A caller is a name or
+# attribute reference, or a string equal to the name (perfbench wraps the
+# pipeline layers by name), outside the function's own body.
+
+
+def _caller_sources():
+    root = PKG.parent
+    yield from PKG.rglob("*.py")
+    for sub in ("tools", "perfbench"):
+        yield from (root / sub).rglob("*.py")
+    for name in ("__spark_entry__.py", "bench.py"):
+        if (root / name).exists():
+            yield root / name
+
+
+def _references() -> set[tuple[str, pathlib.Path, str]]:
+    """(name, file, enclosing top-level def or class) per reference."""
+    refs = set()
+    for p in _caller_sources():
+        for top in ast.parse(p.read_text()).body:
+            owner = getattr(top, "name", "")
+            for n in ast.walk(top):
+                if isinstance(n, ast.Name):
+                    refs.add((n.id, p, owner))
+                elif isinstance(n, ast.Attribute):
+                    refs.add((n.attr, p, owner))
+                elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    refs.add((n.value, p, owner))
+    return refs
+
+
+def test_io_and_pipeline_functions_have_a_caller_or_coverage_row():
+    refs = _references()
+    coverage = (PKG.parent / "COVERAGE.md").read_text()
+    dead = []
+    for sub in ("sources", "pipelines"):
+        for p in sorted((PKG / sub).glob("*.py")):
+            for top in ast.parse(p.read_text()).body:
+                if not isinstance(top, ast.FunctionDef) or top.name.startswith("_"):
+                    continue
+                called = any(
+                    name == top.name and (f, owner) != (p, top.name) for name, f, owner in refs
+                )
+                if not called and not re.search(rf"\b{top.name}\b", coverage):
+                    dead.append(f"{sub}/{p.name}::{top.name}")
+    assert not dead, (
+        "public functions with no caller in the package, tools/, bench.py "
+        "or perfbench/ and no COVERAGE.md row (delete them, or record the "
+        "surveyed surface they cover): " + ", ".join(dead)
     )

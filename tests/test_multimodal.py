@@ -1,5 +1,5 @@
-"""Multimodal operators: metadata sniffing, binary dedup, mapInPandas
-decode plumbing, frame sampling."""
+"""Multimodal operators: metadata sniffing, mapInPandas decode plumbing,
+frame sampling."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from noaa_ais_glue_lakehouse_spark.operators.multimodal import (
     binary_metadata,
     decode_images,
-    dedup_binary_exact,
     sample_frames,
 )
 
@@ -30,11 +29,6 @@ def test_binary_metadata(spark):
     assert got[1][1] == 11
     fps = {r["id"]: r["asset_fingerprint"] for r in out.collect()}
     assert fps[1] == fps[4] and fps[1] != fps[2]
-
-
-def test_dedup_binary_exact(spark):
-    out = dedup_binary_exact(_assets(spark), "payload", "id")
-    assert {r["id"] for r in out.collect()} == {1, 2, 3}
 
 
 def test_decode_images_stub_schema_and_values(spark):

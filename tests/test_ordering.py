@@ -118,7 +118,6 @@ def test_spread_partitions_plan_conditions(spark, tmp_path):
     defaultParallelism partitions is returned UNCHANGED — no exchange
     added at scale (the no-op guard the 100 TB claim rests on)."""
     from noaa_ais_glue_lakehouse_spark.operators.ordering import spread_partitions
-    from noaa_ais_glue_lakehouse_spark.sources.readers import read_parquet_table
 
     p = spark.sparkContext.defaultParallelism
 
@@ -131,10 +130,6 @@ def test_spread_partitions_plan_conditions(spark, tmp_path):
     assert spread.rdd.getNumPartitions() == p
     plan = spread._jdf.queryExecution().executedPlan().toString()
     assert "RoundRobinPartitioning" in plan or "roundrobin" in plan.lower()
-
-    # reader flag reaches the same fix
-    via_reader = read_parquet_table(spark, path, spread_small_scans=True)
-    assert via_reader.rdd.getNumPartitions() == p
 
     # (b) already-parallel input: identical object back, no exchange
     wide = spark.range(0, 1000).repartition(p)

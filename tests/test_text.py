@@ -8,7 +8,6 @@ from noaa_ais_glue_lakehouse_spark.functions.text import (
     char_ngrams,
     langid_guess,
     quality_features,
-    token_count,
     tokenize,
 )
 
@@ -31,11 +30,6 @@ def test_char_ngrams_distinct(spark):
     df = spark.createDataFrame([("aaaa",)], ["t"])
     got = df.select(char_ngrams(F.col("t"), 2)).first()[0]
     assert got == ["aa"]
-
-
-def test_token_count(spark):
-    df = spark.createDataFrame([("one two three",)], ["t"])
-    assert df.select(token_count(F.col("t"))).first()[0] == 3
 
 
 def test_quality_features(spark):

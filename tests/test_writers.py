@@ -1,5 +1,5 @@
-"""Sink round-trips: partitioned dynamic overwrite, window-scoped
-overwrite, quarantine, dated state snapshots."""
+"""Sink round-trips: partitioned dynamic overwrite, quarantine, dated
+state snapshots."""
 
 from __future__ import annotations
 
@@ -15,7 +15,6 @@ from noaa_ais_glue_lakehouse_spark.sources.writers import (
     write_partitioned_parquet,
     write_quarantine,
     write_state_snapshot,
-    write_window_overwrite,
 )
 
 
@@ -39,18 +38,6 @@ def test_dynamic_overwrite_replaces_only_written_partitions(spark, tmp_path):
     write_partitioned_parquet(d2, out, ["day"])
     got = {(r["day"], r["v"]) for r in spark.read.parquet(out).collect()}
     assert got == {(1, 1), (2, 99)}
-
-
-def test_window_overwrite_cannot_touch_outside_window(spark, tmp_path):
-    out = str(tmp_path / "t")
-    write_partitioned_parquet(
-        spark.createDataFrame([(1, 1), (2, 2)], ["v", "day"]), out, ["day"]
-    )
-    # input claims rows for day 1 and 2, but the window only allows day 2
-    mixed = spark.createDataFrame([(50, 1), (60, 2)], ["v", "day"])
-    write_window_overwrite(mixed, out, ["day"], F.col("day") == 2)
-    got = {(r["day"], r["v"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, 1), (2, 60)}  # day=1 untouched
 
 
 def test_quarantine_partition_aware(spark, tmp_path):
@@ -251,78 +238,6 @@ def test_delete_keys_escaped_and_null_partition_values(spark, tmp_path):
     assert "day=a:1" not in os.listdir(path)
 
 
-def test_window_overwrite_crash_mid_write_leaves_old_window_intact(
-    spark, tmp_path
-):
-    """The stage-then-swap contract: if the WRITE JOB dies (here: a
-    runtime assertion inside the plan), published data — including the
-    window being replaced — is byte-identical afterwards, and the
-    failed staging directory is dot-prefixed so readers ignore it."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.utils import StreamingQueryException  # noqa: F401
-
-    from noaa_ais_glue_lakehouse_spark.sources.writers import (
-        write_partitioned_parquet,
-        write_window_overwrite,
-    )
-
-    out = str(tmp_path / "t")
-    write_partitioned_parquet(
-        spark.createDataFrame([(1, 1), (2, 2)], ["v", "day"]), out, ["day"]
-    )
-    before = {}
-    for root, _dirs, files in os.walk(out):
-        for f in files:
-            p = os.path.join(root, f)
-            before[p] = (os.path.getsize(p), os.path.getmtime(p))
-
-    # a plan that fails mid-job, after some rows may already be staged
-    doomed = spark.createDataFrame([(60, 2), (61, 2)], ["v", "day"]).withColumn(
-        "v", F.when(F.col("v") < 61, F.col("v")).otherwise(F.assert_true(F.lit(False)).cast("int"))
-    )
-    try:
-        write_window_overwrite(doomed, out, ["day"], F.col("day") == 2)
-        raise AssertionError("write was expected to fail")
-    except Exception:
-        pass
-    after = {}
-    for root, _dirs, files in os.walk(out):
-        p_rel = os.path.relpath(root, out)
-        if p_rel.startswith(".staging-") or "/.staging-" in p_rel:
-            continue  # failed stage residue is allowed, readers skip dotfiles
-        for f in files:
-            p = os.path.join(root, f)
-            after[p] = (os.path.getsize(p), os.path.getmtime(p))
-    assert after == before  # every published file byte-identical
-    got = {(r["day"], r["v"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, 1), (2, 2)}  # old window fully readable
-
-
-def test_window_overwrite_cleans_staging_on_success(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from noaa_ais_glue_lakehouse_spark.sources.writers import (
-        write_partitioned_parquet,
-        write_window_overwrite,
-    )
-
-    out = str(tmp_path / "t")
-    write_partitioned_parquet(
-        spark.createDataFrame([(1, 1), (2, 2)], ["v", "day"]), out, ["day"]
-    )
-    write_window_overwrite(
-        spark.createDataFrame([(60, 2)], ["v", "day"]), out, ["day"],
-        F.col("day") == 2,
-    )
-    assert not [d for d in os.listdir(out) if d.startswith(".staging-")]
-    got = {(r["day"], r["v"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, 1), (2, 60)}
-
-
 def test_zordered_write_tightens_zone_maps(spark, tmp_path):
     """write_zordered vs an arrival-order write of the same rows: read
     the REAL parquet footer column statistics per file and compare the
@@ -376,7 +291,7 @@ def test_zordered_write_tightens_zone_maps(spark, tmp_path):
 
 
 def test_partitioned_sink_crash_mid_write_leaves_table_intact(spark, tmp_path):
-    """S4's stage-then-swap contract (round-5 upgrade mirroring S5): a
+    """S4's stage-then-swap contract, the window write's sink too: a
     write job that dies mid-flight — after tasks may already have
     produced files — leaves every published partition byte-identical,
     including the partitions the failed write was going to replace.
