@@ -1,8 +1,8 @@
 """Bounded registry for per-query index caches (round 11, guide §5).
 
-Operators cache small per-query indexes (LSH signature/bucket-key
-indexes, the prefix-scan local stream) so ONE physical pass feeds the
-multiple plan references inside the same query. Round 10 left those
+Operators cache small per-query indexes (LSH signature/bucket-key and
+fingerprint indexes) so ONE physical pass feeds the multiple plan
+references inside the same query. Round 10 left those
 InMemoryRelations pinned for the life of the session: a long-lived
 production session accumulates dead cache entries, relying on LRU block
 eviction for memory while the CacheManager still tracks every relation
@@ -15,11 +15,7 @@ so oldest-first matches actual lifetime. Eviction is non-blocking and
 SAFE for consumers whose plan evaluates to the same rows every time: an
 evicted DataFrame silently recomputes from the child plan kept inside its
 InMemoryRelation if it is ever re-used, so only single-evaluation economy
-depends on the cache. The one partition-pinning consumer,
-global_running_sum, is not yet such a consumer: Spark's range-partition
-sampler is not guaranteed to draw the same bounds on a second evaluation,
-so its two lazy evaluations agree only while the cache or exchange reuse
-keeps them to one.
+depends on the cache.
 
 Cap via ``SPARK_GRAFT_QUERY_CACHE_CAP`` (default 16): the driver, bench
 and selfcheck all run queries sequentially, so a handful of live caches

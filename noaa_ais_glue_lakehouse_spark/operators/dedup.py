@@ -215,7 +215,6 @@ def winnow_near_duplicates(
     k: int = 8,
     w: int = 4,
     min_shared: int = 10,
-    materialize_index: bool = True,
     max_df: int | None = None,
 ) -> DataFrame:
     """Winnowing near-dup pairs: documents sharing ≥ ``min_shared``
@@ -224,8 +223,8 @@ def winnow_near_duplicates(
     Deterministic (no randomness), so unlike the MinHash path this
     near-dup family is fully oracle-checkable. Candidate generation is a
     fingerprint equi-join — the same no-cross-product shape as LSH
-    banding. ``materialize_index`` caches the fingerprint index so the
-    self-join's two sides don't each recompute the per-gram md5 pass.
+    banding. The fingerprint index is cached so the self-join's two
+    sides don't each recompute the per-gram md5 pass.
 
     ``max_df`` is the at-scale knob: char-``k``-gram diversity SATURATES
     as a corpus grows (the round-5 decade measurement: 10× docs → mean
@@ -259,8 +258,7 @@ def winnow_near_duplicates(
             .filter(F.col("_df") <= max_df)
             .drop("_df")
         )
-    if materialize_index:
-        idx = query_scoped_cache(idx)
+    idx = query_scoped_cache(idx)
     a = idx.alias("a")
     b = idx.alias("b")
     return (
@@ -350,7 +348,6 @@ def jaccard_pairs_prefix_filter(
     threshold: float,
     use_char_ngrams: bool = False,
     ngram_n: int = 3,
-    materialize_sets: bool = False,
 ) -> DataFrame:
     """EXACT Jaccard ≥ threshold pairs WITHOUT the O(n²) cross join —
     the AllPairs/PPJoin prefix-filter algorithm (Bayardo et al., WWW'07;
@@ -381,16 +378,8 @@ def jaccard_pairs_prefix_filter(
         .withColumn("_n", F.size("_sh"))
         .filter(F.col("_n") > 0)
     )
-    if materialize_sets:
-        # sets still feeds THREE consumers (the prefix-token stream —
-        # itself cached below — and the two verify sides) whose
-        # exchanges hash different keys, so ReuseExchange can't dedup
-        # them. Opt-in, not default: with the prefix relation cached the
-        # round-11 A/B measured the sets cache at parity (10.2 vs
-        # 10.6 s at sf0.1, ~23 tokens/doc); turn it on when shingling
-        # dominates (long docs / char n-grams), the same regime where
-        # minhash's materialize_index pays for itself.
-        sets = query_scoped_cache(sets)
+    # sets is not cached: with the prefix relation cached below, the
+    # round-11 A/B measured a sets cache at parity (10.2 vs 10.6 s, sf0.1)
     tok = sets.select("_id", "_n", F.explode("_sh").alias("_tok"))
     # Token document-frequency as a count window on the SAME exploded
     # stream (round 11 — the q372 treatment): the former
@@ -722,7 +711,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     use_char_ngrams: bool = True,
     ngram_n: int = 5,
-    materialize_index: bool = True,
 ) -> DataFrame:
     """MinHash + banded LSH candidate pairs (id_a < id_b, distinct).
 
@@ -733,23 +721,22 @@ def minhash_lsh_candidates(
     no cross product; bucket skew (giant clusters) is bounded by AQE skew
     handling plus the first-collision-band dedup.
 
-    ``materialize_index`` caches the per-doc signature index
-    (~8·num_hashes bytes/doc) so the self-join's two sides don't each
-    recompute the full shingle pass — the standard "materialize the
-    signature index" step of any LSH pipeline. cache() beats
+    The per-doc signature index (~8·num_hashes bytes/doc) is cached so
+    the self-join's two sides don't each recompute the full shingle
+    pass — the standard "materialize the signature index" step of any
+    LSH pipeline. cache() beats
     localCheckpoint here: no separate blocking job, and the
     InMemoryRelation's accurate statistics let AQE broadcast the verify
     joins (measured 13.9 s → 6.1 s fresh-build at sf0.1). Blocks are
     LRU-evictable (MEMORY_AND_DISK), so repeated invocations in one
-    session self-limit. Set False to keep the plan fully lazy.
+    session self-limit.
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
     feats = _minhash_index(
         df, id_col, text_col, num_hashes, use_char_ngrams, ngram_n, with_sets=False
     )
-    if materialize_index:
-        feats = query_scoped_cache(feats)
+    feats = query_scoped_cache(feats)
     return _band_pairs(feats, id_col, num_hashes, bands)
 
 
@@ -762,7 +749,6 @@ def minhash_near_duplicates(
     bands: int | None = None,
     use_char_ngrams: bool = True,
     ngram_n: int = 5,
-    materialize_index: bool = True,
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard ≥ threshold.
 
@@ -797,11 +783,10 @@ def minhash_near_duplicates(
     geometry stands; at sf0.1 the cost center is the shared index build
     (one shingle pass), already single-hash + codegen-optimized below.
 
-    ``materialize_index`` caches ONE per-doc index carrying both the
-    signature mins and the hashed shingle set (~8·(num_hashes+|set|)
-    bytes/doc), shared by the band self-join (2 consumers) and the verify
-    joins (2 more) — without it the full text→shingle→agg pass runs four
-    times. See minhash_lsh_candidates for why cache() over
+    ONE cached per-doc index carries both the signature mins and the
+    hashed shingle set (~8·(num_hashes+|set|) bytes/doc), shared by the
+    band self-join (2 consumers) and the verify joins (2 more) — without
+    it the full text→shingle→agg pass runs four times. See minhash_lsh_candidates for why cache() over
     localCheckpoint.
 
     Round-4 cost accounting at sf0.1 / threshold 0.8 (measured): the
@@ -829,8 +814,7 @@ def minhash_near_duplicates(
     feats = _minhash_index(
         df, id_col, text_col, num_hashes, use_char_ngrams, ngram_n, with_sets=True
     )
-    if materialize_index:
-        feats = query_scoped_cache(feats)
+    feats = query_scoped_cache(feats)
     cands = _band_pairs(feats, id_col, num_hashes, bands)
     sets = feats.select(F.col(id_col), "_sh", "_n", "_mlo", "_mhi")
     out = (
@@ -927,7 +911,6 @@ def simhash_near_duplicates(
     text_col: str,
     max_hamming: int = 3,
     n_blocks: int = 4,
-    materialize_index: bool = True,
     portable_hash: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ max_hamming.
@@ -956,10 +939,9 @@ def simhash_near_duplicates(
         sigs = _spread(df.select(F.col(id_col), F.col(text_col))).select(
             F.col(id_col), simhash64(tokenize(F.col(text_col))).alias("_simhash")
         )
-    if materialize_index:
-        # one 16-byte row per doc; the self-join's two sides would each
-        # recompute the full tokenize+simhash pass otherwise
-        sigs = query_scoped_cache(sigs)
+    # one 16-byte row per doc; the self-join's two sides would each
+    # recompute the full tokenize+simhash pass otherwise
+    sigs = query_scoped_cache(sigs)
     block_bits = 64 // n_blocks
     mask = (1 << block_bits) - 1
     blocked = sigs.select(
@@ -1136,7 +1118,6 @@ def winnow_incremental_pairs(
     k: int = 8,
     w: int = 4,
     min_shared: int = 10,
-    materialize_index: bool = True,
 ) -> DataFrame:
     """Incremental near-dedup: winnowing candidate pairs where AT LEAST
     ONE side is a newly-arrived document — the daily-batch contract where
@@ -1162,8 +1143,7 @@ def winnow_incremental_pairs(
         k,
         w,
     ).join(df.select(F.col(id_col), F.col(is_new_col)), id_col)
-    if materialize_index:
-        idx = query_scoped_cache(idx)
+    idx = query_scoped_cache(idx)
     new_idx = idx.filter(F.col(is_new_col))
     a = idx.alias("a")
     b = new_idx.alias("b")
@@ -1457,7 +1437,7 @@ def minhash_contamination_portable(
     # the index feeds FOUR references (bench band, corpus band, both
     # verify sides) — uncached, the md5-shingle aggregation re-ran per
     # reference (round 11; same treatment as minhash_near_duplicates'
-    # materialize_index, via the bounded registry)
+    # signature index, via the bounded registry)
     feats = query_scoped_cache(
         exploded.groupBy(id_col).agg(*aggs).withColumn("_n", F.size("_sh"))
     )

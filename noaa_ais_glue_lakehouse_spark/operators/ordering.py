@@ -14,51 +14,21 @@ action that already runs, costing one aggregate per partition.
 
 from __future__ import annotations
 
-import os
-import re
-
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
-from noaa_ais_glue_lakehouse_spark.operators._cache import query_scoped_cache
-
-
-def _memory_conf_bytes(text: str) -> int | None:
-    """Bytes of a Spark memory size (``512m``, ``2g``, ``1.5g``, ``4gb``);
-    a unitless number means MiB, as Spark reads ``spark.*.memory``.
-    None when the text is not a size."""
-    m = re.fullmatch(r"(\d+(?:\.\d+)?)([bkmgt]?)b?", text.strip().lower())
-    if m is None:
-        return None
-    units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    return int(float(m.group(1)) * units[m.group(2) or "m"])
-
-
-def _grs_cache_budget_bytes(df: DataFrame) -> int:
-    """Storage budget the auto-materialize policy compares against.
-
-    ``SPARK_GRAFT_GRS_CACHE_MAX_BYTES`` wins when set (the production
-    knob); otherwise half of the unified-memory pool of one JVM
-    (driver in local mode, one executor otherwise) — an
-    order-of-magnitude gate, not an exact admission test: a cached
-    stream well under it fits; one past it would spill, and the
-    round-11 spill A/B measured recompute 1.79× FASTER than a spilled
-    cache (50M rows / est 1.4 GB vs a 0.6 GB pool: 31.2 s vs 55.8 s
-    median)."""
-    try:
-        return int(os.environ["SPARK_GRAFT_GRS_CACHE_MAX_BYTES"])
-    except (KeyError, ValueError):
-        pass  # unset or not integer bytes: derive from the memory conf
-    conf = df.sparkSession.sparkContext.getConf()
-    master = conf.get("spark.master", "local")
-    key = (
-        "spark.driver.memory"
-        if master.startswith("local")
-        else "spark.executor.memory"
-    )
-    nbytes = _memory_conf_bytes(conf.get(key, "1g")) or 1 << 30
-    frac = float(conf.get("spark.memory.fraction", "0.6"))
-    return int(0.5 * frac * nbytes)
+# global_running_sum: order keys sampled, and range buckets drawn, per
+# shuffle partition
+_SAMPLE_ROWS_PER_PARTITION = 100
+_BUCKETS_PER_PARTITION = 4
+_SAMPLE_SEED = 17
 
 
 def spread_partitions(df: DataFrame) -> DataFrame:
@@ -121,13 +91,69 @@ def with_row_observations(
     return df.observe(obs, *metrics), obs
 
 
+def _portable(field: StructField) -> Column:
+    """A key column in a form that survives ``collect()`` exactly.
+
+    A Python ``datetime`` does not: it is read and written in the Python
+    process's time zone, which maps both 01:30s of a DST fall-back to one
+    instant and shifts a TIMESTAMP_NTZ wall time by that zone's offset.
+    So TIMESTAMP travels as epoch micros and TIMESTAMP_NTZ as its
+    wall-clock string; every other type as its Python value."""
+    if isinstance(field.dataType, TimestampType):
+        return F.unix_micros(field.name).alias(field.name)
+    if isinstance(field.dataType, TimestampNTZType):
+        return F.col(field.name).cast("string").alias(field.name)
+    return F.col(field.name)
+
+
+def _bound_literal(value, dtype) -> Column:
+    """A collected ``_portable`` value as a literal of its column's type."""
+    if isinstance(dtype, TimestampType) and value is not None:
+        return F.timestamp_micros(F.lit(value))
+    return F.lit(value).cast(dtype)
+
+
+def _with_range_bucket(df: DataFrame, key_type: StructType, bounds: list) -> DataFrame:
+    """``df`` plus ``_pid`` = the number of ``bounds`` at or below the
+    row's order key (the columns of ``key_type``).
+
+    A binary search over ONE array literal of the bounds, unrolled into
+    one projection per probe (log2 |bounds| of them; each reads the
+    previous ``_pid`` more than once, so Catalyst keeps them apart). Its
+    generated code grows with log |bounds|, where a CASE tree with one
+    literal per bound grows linearly and, past ~150 bounds, exceeds the
+    method size the JVM will JIT-compile (5M rows, 4 cores: 3.2 s at 199
+    bounds vs 0.55 s for this search). Padding with the last bound keeps
+    every probe in range; the padded copies only leave empty buckets."""
+    key = F.struct(*key_type.names)
+    types = [f.dataType for f in key_type.fields]
+    steps = len(bounds).bit_length()
+    padded = bounds + bounds[-1:] * ((1 << steps) - 1 - len(bounds))
+    # typed as the key, so the cast folds and no probe casts per row; a
+    # string-cast TIMESTAMP_NTZ literal is nullable, so its field must be
+    bound_type = StructType(
+        [
+            StructField(f.name, f.dataType, f.nullable or isinstance(f.dataType, TimestampNTZType))
+            for f in key_type.fields
+        ]
+    )
+    arr = F.array(
+        *[F.struct(*[_bound_literal(v, t) for v, t in zip(b, types)]) for b in padded]
+    ).cast(ArrayType(bound_type, containsNull=False))
+    out = df.withColumn("_pid", F.lit(0))
+    for s in reversed(range(steps)):
+        probe = F.col("_pid") + (1 << s)
+        out = out.withColumn(
+            "_pid", F.when(key >= F.element_at(arr, probe), probe).otherwise(F.col("_pid"))
+        )
+    return out
+
+
 def global_running_sum(
     df: DataFrame,
     order_cols: list[str],
     value_col: str,
     out_col: str = "running",
-    num_partitions: int | None = None,
-    materialize: bool | str = "auto",
 ) -> DataFrame:
     """Globally-ordered running sum WITHOUT a single-partition window —
     the classic two-phase parallel prefix scan.
@@ -136,69 +162,52 @@ def global_running_sum(
     the whole table into ONE task (Spark even warns about it) — a
     non-starter at 100 TB. Instead:
 
-    1. range-repartition on the order columns (equal keys co-located,
-       partitions globally ordered);
-    2. per-partition local running sum (ordinary windows, parallel);
-    3. per-partition totals (|partitions| rows) get an exclusive running
-       offset on the driver-sized side and broadcast back;
-    4. running = local + offset of all earlier partitions.
+    1. range bounds, once, at plan-build time: a seeded sample of
+       ``100 x n`` order keys (``n = spark.sql.shuffle.partitions``),
+       sorted by Spark so NULL-first, NaN-last and -0.0 = 0.0 match the
+       window's sort, gives ``4n - 1`` evenly spaced bounds — four range
+       buckets per shuffle partition, because hashing only ``n`` bucket
+       ids into ``n`` partitions leaves about 1/e of them empty;
+    2. ``_pid`` = number of bounds <= the row's key — a deterministic
+       function of the key, so every evaluation of the plan agrees on it
+       with or without exchange reuse (duplicate bounds only leave an
+       empty bucket; an empty input has no bounds and one bucket);
+    3. per-bucket local running sum (ordinary windows, parallel);
+    4. per-bucket totals (|buckets| rows) get an exclusive running
+       offset and are broadcast back; running = local + offset.
 
     Ties in ``order_cols`` make intermediate running values
     frame-order-dependent (exactly as SQL's ROWS frame is); the value at
     the END of each tie group — and any MAX/MIN over the running column —
     is deterministic.
 
-    ``materialize`` (round 10, guide §2.4/§5): the locally-scanned stream
-    feeds TWO plan references — the main output and the per-partition
-    totals — and Catalyst does not share the subtree (exchange reuse
-    fails across the AQE-replanned range exchange), so WITHOUT
-    materialization the ENTIRE upstream pipeline ran twice (q172's
-    before-plan holds two full scan→sessionize→window copies). cache()
-    runs it once; it also pins ONE sampled range partitioning, so the
-    broadcast offsets provably describe the same _pid layout the main
-    stream carries. Pass False to keep the plan fully lazy — but the
-    uncached path is correct ONLY while Spark reuses the range exchange
-    for both references: with exchange reuse off, the two evaluations
-    partition independently and the offsets no longer line up with
-    ``_pid`` (1M rows, 8 partitions: 742,044 wrong running sums).
-    Computing the range bounds once is ROADMAP open item 1.
-
-    ``"auto"`` (round 11, verdict ask #3 — the default): cache only when
-    the optimizer's size estimate for the local stream fits the storage
-    budget (``_grs_cache_budget_bytes``). The round-11 spill A/B pinned
-    the failure mode the round-10 blanket default had at scale: a 50M-row
-    stream (est 1.4 GB) against a 0.6 GB pool ran 55.8 s cached vs 31.2 s
-    recomputed (medians of 3; caching a stream that spills costs the
-    materialization barrier AND a disk round-trip, where recompute is one
-    extra pass over a cheap upstream). An unknown estimate counts as
-    too-big — a spilled full-dataset copy at 100 TB is not survivable,
-    and recompute carries the exchange-reuse caveat above. The cache
-    itself is registered in the bounded query-cache registry either way.
+    There is no cache: with exchange reuse on, the stream's two
+    references (local sums, totals) read one shuffle, and with it off
+    they recompute to the same buckets. The bounds job does evaluate
+    the input once more, at plan-build time.
     """
-    cols = [F.col(c) for c in order_cols]
-    part = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    keys = df.select(*order_cols)
+    sample = (
+        keys.orderBy(F.rand(_SAMPLE_SEED))
+        .limit(_SAMPLE_ROWS_PER_PARTITION * n)
+        .orderBy(*order_cols)
+        .select(*[_portable(f) for f in keys.schema.fields])
+        .collect()
     )
-    part = part.withColumn("_pid", F.spark_partition_id())
+    buckets = _BUCKETS_PER_PARTITION * n
+    bounds = (
+        [tuple(sample[i * len(sample) // buckets]) for i in range(1, buckets)] if sample else []
+    )
+    cols = [F.col(c) for c in order_cols]
+    keyed = _with_range_bucket(df, keys.schema, bounds)
     w_local = (
         Window.partitionBy("_pid")
         .orderBy(*cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = part.withColumn("_local", F.sum(F.col(value_col)).over(w_local))
-    if materialize == "auto":
-        try:
-            est = int(
-                local._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = 1 << 62  # unknown size: treat as too big to cache
-        materialize = est <= _grs_cache_budget_bytes(local)
-    if materialize:
-        local = query_scoped_cache(local)
-    # exclusive prefix over per-partition totals: |partitions| rows, so the
+    local = keyed.withColumn("_local", F.sum(F.col(value_col)).over(w_local))
+    # exclusive prefix over per-bucket totals: |buckets| rows, so the
     # single-partition window here is over a driver-sized set by design
     totals = local.groupBy("_pid").agg(F.sum(value_col).alias("_tot"))
     w_off = (

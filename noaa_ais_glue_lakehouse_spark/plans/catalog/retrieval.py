@@ -772,9 +772,9 @@ def q222_maxsim_late_interaction(
 
 @register(
     "q227_reciprocal_rank_fusion",
-    # the 1-row cross join now sits INSIDE global_running_sum's cached
-    # stream (round 10); the plan audits descend into cached subtrees to
-    # keep validating its bound
+    # the 1-row BM25 stats cross join feeds both global_running_sum
+    # references (local sums and per-bucket totals); the plan audits
+    # validate its bound
     allow_non_equi="inherits the BM25 single-row stats cross join via _bm25_scored",
     oracle=_BM25_SQL_BASE
     + """
@@ -1584,7 +1584,7 @@ def q318_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dims feeds ~6 subtrees across the unrolled rounds (each assignment
     # AND each centroid update re-joins it); cache() so the corpus is
-    # scanned+exploded once, not six times (the minhash materialize_index
+    # scanned+exploded once, not six times (the minhash signature-index cache
     # precedent — MEMORY_AND_DISK, LRU-evictable)
     dims = query_scoped_cache(dims)
     cent = dims.filter(F.col("vec_id") < 4).select(

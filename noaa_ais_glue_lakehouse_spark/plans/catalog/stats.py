@@ -188,9 +188,10 @@ def q52_jump_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q56_enforced_read_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 — schema-enforced parquet read with cast-by-name fallback: the
-    declared read schema drops to exactly the needed columns (projection
-    enforced at the scan) and survives type drift via the fallback path."""
+    """S2 — schema-enforced parquet read: the declared read schema drops
+    to exactly the needed columns (projection enforced at the scan). It
+    declares the types the events files hold; physical-type drift would
+    raise at execution (see ``read_parquet_enforced``)."""
     from pyspark.sql import types as T
 
     from noaa_ais_glue_lakehouse_spark.sources.readers import read_parquet_enforced

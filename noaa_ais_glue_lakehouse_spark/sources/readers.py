@@ -83,18 +83,18 @@ def read_csv_with_header(spark: SparkSession, path: str) -> DataFrame:
 def read_parquet_enforced(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:
-    """S2 — schema-enforced parquet read with cast-by-name fallback.
+    """S2 — schema-enforced parquet read (reference
+    ``fact_voyage_trajectory.py:62-102``): the declared schema is the
+    scan's read schema, so only the declared columns are read and a
+    declared column absent from the files reads as NULL.
 
-    Tries the declared read schema; on mismatch re-reads without it and
-    casts each declared column by name (reference
-    ``fact_voyage_trajectory.py:62-102``).
+    Physical-type drift (e.g. INT64 ids in files declared INT32) is NOT
+    absorbed: analysis never opens a file footer, so the mismatch raises
+    ``FAILED_READ_FILE`` when the plan executes. A drift-tolerant read
+    is ``cast_to_schema`` over an inferred read, as
+    ``writers.read_state_snapshot_by_date`` does.
     """
-    try:
-        df = spark.read.schema(schema).option("mergeSchema", "false").parquet(path)
-        df.schema  # force analysis
-        return df
-    except Exception:
-        return cast_to_schema(spark.read.parquet(path), schema)
+    return spark.read.schema(schema).option("mergeSchema", "false").parquet(path)
 
 
 def cast_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:

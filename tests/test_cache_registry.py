@@ -62,18 +62,21 @@ def test_release_query_caches_empties_registry(spark):
 
 
 def test_operator_caches_register(spark, monkeypatch):
-    """global_running_sum's materialized local stream goes through the
-    registry (the round-10 default-on cache was session-pinned)."""
-    from noaa_ais_glue_lakehouse_spark.operators.ordering import (
-        global_running_sum,
+    """winnow_near_duplicates' fingerprint index cache goes through the
+    registry (the round-10 default-on caches were session-pinned)."""
+    from noaa_ais_glue_lakehouse_spark.operators.dedup import (
+        winnow_near_duplicates,
     )
 
     release_query_caches()
-    df = spark.range(0, 1000).selectExpr("id AS k", "id % 7 AS v")
-    out = global_running_sum(df, ["k"], "v", num_partitions=4)
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    df = spark.createDataFrame(
+        [(1, text), (2, text + " today"), (3, "entirely different words here")],
+        ["doc_id", "text"],
+    )
+    out = winnow_near_duplicates(df, "doc_id", "text", min_shared=3)
     assert live_cache_count() == 1
-    total = out.agg({"running": "max"}).collect()[0][0]
-    assert total == sum(i % 7 for i in range(1000))
+    assert [(r["id_a"], r["id_b"]) for r in out.collect()] == [(1, 2)]
     _cache.release_query_caches()
     assert live_cache_count() == 0
 

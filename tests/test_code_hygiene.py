@@ -34,6 +34,9 @@ PKG = pathlib.Path(__file__).resolve().parents[1] / "noaa_ais_glue_lakehouse_spa
 #     The 30 value-iteration rounds run on the driver in exact int64
 #     arithmetic (_shared._absorb_iterate_start) instead of 30 Spark
 #     jobs of pure scheduler overhead over a few hundred rows.
+#   - global_running_sum: the range-bound sample of the order key,
+#     .limit(100 * spark.sql.shuffle.partitions) precedes the collect
+#     (<= 100·n rows at any corpus scale)
 ALLOWED_COLLECT_SITES = {
     ("operators/similarity.py", "_pair_cosine_by_index_udf"): 1,
     ("plans/catalog/events.py", "q423_markov_attribution"): 1,
@@ -43,6 +46,7 @@ ALLOWED_COLLECT_SITES = {
     ("operators/tokenizer.py", "_bpe_merge_rounds"): 1,
     ("sources/writers.py", "list_partitions"): 1,
     ("sources/writers.py", "delete_keys_partition_scoped"): 3,
+    ("operators/ordering.py", "global_running_sum"): 1,
 }
 
 

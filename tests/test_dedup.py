@@ -213,24 +213,6 @@ def test_first_collision_equals_distinct_of_all_band_collisions(spark):
     assert fast == naive and len(naive) > 0
 
 
-def test_minhash_materialize_index_equivalence(spark):
-    """materialize_index=True (localCheckpoint) and False (pure lazy) must
-    return identical near-dup pairs."""
-    df = _corpus(spark)
-    kw = dict(threshold=0.7, use_char_ngrams=False)
-    a = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_near_duplicates(df, "doc_id", "text", **kw).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in minhash_near_duplicates(
-            df, "doc_id", "text", materialize_index=False, **kw
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 def test_minhash_ignores_empty_documents(spark):
     """Docs with no shingles (empty/whitespace text) produce no signature
     row and therefore no pairs — never a crash or a null-key bucket."""

@@ -136,7 +136,7 @@ def test_global_running_sum_empty(spark):
     )
 
     empty = spark.createDataFrame([], "t bigint, v bigint")
-    assert global_running_sum(empty, ["t"], "v", num_partitions=3).count() == 0
+    assert global_running_sum(empty, ["t"], "v").count() == 0
 
 
 def test_pagerank_empty_edges(spark):

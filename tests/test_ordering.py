@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from types import SimpleNamespace
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,9 +51,7 @@ def test_global_running_sum_matches_single_window(spark):
     rows = [(rng.randint(0, 50), rng.choice([1, -1]), i) for i in range(400)]
     df = spark.createDataFrame(rows, ["k", "delta", "rid"])
 
-    out = global_running_sum(
-        df, ["k", "rid"], "delta", out_col="c", num_partitions=8
-    ).collect()
+    out = global_running_sum(df, ["k", "rid"], "delta", out_col="c").collect()
     w = Window.orderBy("k", "rid").rowsBetween(Window.unboundedPreceding, 0)
     ref = {
         (r["k"], r["rid"]): r["c"]
@@ -67,13 +63,13 @@ def test_global_running_sum_matches_single_window(spark):
         assert r["c"] == ref[(r["k"], r["rid"])]
 
 
-def test_global_running_sum_materializes_scanned_stream(spark):
-    """Round 10: the prefix scan's locally-scanned stream feeds TWO plan
-    references (main output + per-partition totals) and Catalyst does
-    not share the subtree, so materialize=True must cache it — the plan
-    reads InMemoryTableScan, and the upstream input appears ONCE inside
-    the InMemoryRelation. materialize=False keeps the plan fully lazy
-    (no cache node), preserving the opt-out."""
+def test_global_running_sum_plan_is_cache_free_and_hash_bucketed(spark):
+    """The bucket id is computed from the order key, so the plan needs
+    neither a cache nor a range exchange to keep its two references to
+    the locally-scanned stream in agreement: no InMemoryRelation, no
+    RangePartitioning, and the window exchange hashes ``_pid``."""
+    import re
+
     from noaa_ais_glue_lakehouse_spark.operators.ordering import (
         global_running_sum,
     )
@@ -81,21 +77,21 @@ def test_global_running_sum_materializes_scanned_stream(spark):
     df = spark.range(100).withColumnRenamed("id", "t").withColumn(
         "v", (F.col("t") % 3 - 1).cast("int")
     )
-    # lazy FIRST: once materialize=True has cached the stream, the
-    # CacheManager substitutes any logically-equal later plan with the
-    # InMemoryRelation, so the order of these two checks matters
-    lazy = global_running_sum(
-        df, ["t"], "v", num_partitions=4, materialize=False
-    )
-    lazy_plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in lazy_plan, lazy_plan
-    got_l = {r["t"]: r["running"] for r in lazy.collect()}
-    cached = global_running_sum(df, ["t"], "v", num_partitions=4)
-    plan = cached._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
-    # both forms compute the same running sums
-    got_c = {r["t"]: r["running"] for r in cached.collect()}
-    assert got_c == got_l and len(got_c) == 100
+    out = global_running_sum(df, ["t"], "v")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemory" not in plan, plan
+    assert "rangepartitioning" not in plan.lower(), plan
+    assert re.search(r"hashpartitioning\(_pid#\d+", plan), plan
+    # one bucket-search probe per projection: a Catalyst rule that
+    # inlined them into each other would grow the expression 3x per probe
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert max(line.count("CASE WHEN") for line in optimized.splitlines()) == 1
+    got = {r["t"]: r["running"] for r in out.collect()}
+    acc, want = 0, {}
+    for t in range(100):
+        acc += t % 3 - 1
+        want[t] = acc
+    assert got == want
 
 
 def test_global_running_sum_no_single_partition_window(spark):
@@ -108,7 +104,7 @@ def test_global_running_sum_no_single_partition_window(spark):
     df = spark.range(100).withColumnRenamed("id", "t").withColumn(
         "v", (F.col("t") % 3 - 1).cast("int")
     )
-    out = global_running_sum(df, ["t"], "v", num_partitions=4)
+    out = global_running_sum(df, ["t"], "v")
     assert out.count() == 100
 
 
@@ -138,67 +134,118 @@ def test_spread_partitions_plan_conditions(spark, tmp_path):
     assert spread_partitions(wide2) is wide2
 
 
-def test_grs_auto_materialize_policy(spark, monkeypatch):
-    """materialize="auto" (round 11): cache when the optimizer's size
-    estimate fits the storage budget, bypass when it does not — and the
-    result is identical either way (the cache is an economy, never a
-    correctness dependency)."""
+@pytest.mark.parametrize(
+    "reuse, aqe",
+    [("true", "true"), ("false", "true"), ("false", "false")],
+    ids=["reuse", "noreuse", "noreuse-noaqe"],
+)
+def test_global_running_sum_exact_without_exchange_reuse(spark, reuse, aqe):
+    """1M rows under a permutation key: every running sum is exact with
+    exchange reuse on, off, and off with AQE off. The plan reads the
+    bucketed stream twice (local sums and per-bucket totals); a bucket id
+    that differed between the two evaluations — as Spark's range sampler
+    can when nothing shares the exchange — misaligns the offsets."""
     from noaa_ais_glue_lakehouse_spark.operators.ordering import (
         global_running_sum,
     )
 
-    df = spark.range(0, 10_000).selectExpr("id AS k", "id % 13 AS v")
-    expected = sum(i % 13 for i in range(10_000))
-
-    # generous budget -> cached (an InMemoryRelation in the plan)
-    monkeypatch.setenv("SPARK_GRAFT_GRS_CACHE_MAX_BYTES", str(1 << 40))
-    out = global_running_sum(df, ["k"], "v", num_partitions=8)
-    assert "InMemoryRelation" in out._jdf.queryExecution().optimizedPlan().toString()
-    assert out.agg({"running": "max"}).collect()[0][0] == expected
-
-    # drop the first call's cache: the CacheManager would otherwise
-    # substitute it into the second plan regardless of the policy
-    from noaa_ais_glue_lakehouse_spark.operators._cache import (
-        release_query_caches,
-    )
-
-    release_query_caches()
-
-    # 1-byte budget -> bypassed, fully lazy, same answer
-    monkeypatch.setenv("SPARK_GRAFT_GRS_CACHE_MAX_BYTES", "1")
-    out2 = global_running_sum(df, ["k"], "v", num_partitions=8)
-    assert (
-        "InMemoryRelation"
-        not in out2._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert out2.agg({"running": "max"}).collect()[0][0] == expected
+    n = 1_000_000
+    keys = ("spark.sql.exchange.reuse", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.exchange.reuse", reuse)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        # 7919 is prime and coprime to n, so k is a permutation of [0, n)
+        # whose order differs from the input's; v = 1 makes the exact
+        # running sum at key k equal to k + 1
+        df = spark.range(n).select(
+            ((F.col("id") * 7919) % n).alias("k"), F.lit(1).alias("v")
+        )
+        out = global_running_sum(df, ["k"], "v")
+        wrong = out.filter(F.col("running") != F.col("k") + 1).count()
+        assert wrong == 0
+        assert out.count() == n
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
-def _pool_half(heap: int) -> int:
-    return int(0.5 * 0.6 * heap)  # half the default unified-memory pool
+# every catalog query that reaches global_running_sum: directly, or via
+# exact_auc (q220) or plan_compaction (q245)
+GRS_CONSUMERS = [
+    "q172_max_concurrent_sessions",
+    "q220_auc_rank_sum",
+    "q225_sorted_neighborhood_pairs",
+    "q227_reciprocal_rank_fusion",
+    "q245_compaction_plan",
+    "q251_sequence_packing",
+    "q252_budgeted_selection",
+    "q270_epoch_shuffle_shards",
+    "q293_curriculum_stages",
+    "q304_exact_global_percentiles",
+    "q360_average_precision",
+    "q377_vocab_growth_curve",
+    "q379_equidepth_bins",
+]
 
 
-@pytest.mark.parametrize(
-    "env, master, memory, budget",
-    [
-        (None, "local[4]", "2g", _pool_half(2 << 30)),
-        (None, "local[4]", "4096", _pool_half(4 << 30)),  # unitless = MiB, as in Spark
-        (None, "local[4]", "1.5g", _pool_half(3 << 29)),  # fractional parses
-        (None, "local[4]", "512mb", _pool_half(1 << 29)),
-        (None, "local[4]", "lots", _pool_half(1 << 30)),  # unparseable -> 1 GiB
-        (None, "spark://host:7077", "3g", _pool_half(3 << 30)),  # executor memory
-        ("12345", "local[4]", "2g", 12345),  # the knob wins when well-formed
-        ("2gb", "local[4]", "2g", _pool_half(2 << 30)),  # malformed knob falls back
-    ],
-)
-def test_grs_cache_budget_bytes_parses_defensively(monkeypatch, env, master, memory, budget):
-    from noaa_ais_glue_lakehouse_spark.operators.ordering import _grs_cache_budget_bytes
+@pytest.mark.parametrize("name", GRS_CONSUMERS)
+def test_grs_consumer_rows_do_not_depend_on_exchange_reuse(spark, name):
+    """Each consumer returns the same rows with exchange reuse and AQE
+    off as under the session's defaults (sf0.001)."""
+    from noaa_ais_glue_lakehouse_spark.plans import catalog
 
-    if env is None:
-        monkeypatch.delenv("SPARK_GRAFT_GRS_CACHE_MAX_BYTES", raising=False)
-    else:
-        monkeypatch.setenv("SPARK_GRAFT_GRS_CACHE_MAX_BYTES", env)
-    key = "spark.driver.memory" if master.startswith("local") else "spark.executor.memory"
-    conf = {"spark.master": master, key: memory}
-    df = SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=SimpleNamespace(getConf=lambda: conf)))
-    assert _grs_cache_budget_bytes(df) == budget
+    sf_dir = "/root/testdata/sf0.001"
+    query = catalog.queries()[name]
+    want = sorted(map(repr, query(spark, sf_dir).collect()))
+    keys = ("spark.sql.exchange.reuse", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "false")
+        got = sorted(map(repr, query(spark, sf_dir).collect()))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert got == want and want
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp_ltz", "timestamp_ntz"])
+def test_global_running_sum_timestamp_bounds_keep_their_instant(spark, monkeypatch, ts_type):
+    """Range bounds drawn from a timestamp key stay exact when the Python
+    process observes DST in another time zone than the session's. A
+    naive-datetime round trip maps both 01:30s of the New York fall-back
+    hour to the first one (TIMESTAMP: the bounds come back unsorted) or
+    shifts every bound by the zone offset (TIMESTAMP_NTZ); either way a
+    few buckets swallow most rows."""
+    import time
+
+    from noaa_ais_glue_lakehouse_spark.operators import ordering
+
+    keyed = []
+    bucket = ordering._with_range_bucket
+
+    def spy(df, key_type, bounds):
+        keyed.append(bucket(df, key_type, bounds))
+        return keyed[-1]
+
+    monkeypatch.setattr(ordering, "_with_range_bucket", spy)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        # every 10 s from 04:00 to 08:00 UTC on the fall-back day, which
+        # covers the repeated 01:00-02:00 New York hour
+        start = 1730606400  # 2024-11-03 04:00:00 UTC
+        df = spark.range(1440).select(
+            F.timestamp_seconds(F.lit(start) + F.col("id") * 10).cast(ts_type).alias("ts"),
+            F.col("id"),
+            F.lit(1).alias("v"),
+        )
+        out = ordering.global_running_sum(df, ["ts"], "v")
+        assert out.filter(F.col("running") != F.col("id") + 1).count() == 0
+        sizes = [r["count"] for r in keyed[0].groupBy("_pid").count().collect()]
+        # 16 buckets of ~90 rows; the lossy round trip left one of 455
+        assert max(sizes) < 3 * 1440 / 16, sorted(sizes)
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -266,12 +266,11 @@ def _walk_phys(node):
     yield node
     for i in range(node.children().size()):
         yield from _walk_phys(node.children().apply(i))
-    # Round 10: descend into cached subtrees — a bounded non-equi join
-    # hidden behind .cache() (e.g. q227's 1-row BM25 stats cross join,
-    # now inside global_running_sum's materialized stream) must stay
-    # auditable; the string-scan audit above sees the cached plan text,
-    # so the tree walk must see the same nodes or the two audits
-    # contradict each other on tag staleness.
+    # Descend into cached subtrees — a bounded non-equi join hidden
+    # behind an operator's .cache() must stay auditable; the string-scan
+    # audit above sees the cached plan text, so the tree walk must see
+    # the same nodes or the two audits contradict each other on tag
+    # staleness.
     cls = node.getClass().getSimpleName()
     if cls == "InMemoryTableScanExec":
         yield from _walk_phys(node.relation().cachedPlan())

@@ -187,8 +187,8 @@ def test_prefix_filter_jaccard_equals_brute_force(spark, texts, threshold):
 )
 def test_global_running_sum_property(spark, rows):
     """Parallel prefix scan ≡ sequential cumsum under the same total
-    order, for arbitrary keys/values and a partition count that forces
-    multi-partition offsets."""
+    order, for arbitrary keys/values; the fixture session's 4 shuffle
+    partitions force multi-bucket offsets."""
     from noaa_ais_glue_lakehouse_spark.operators.ordering import (
         global_running_sum,
     )
@@ -197,9 +197,7 @@ def test_global_running_sum_property(spark, rows):
     df = spark.createDataFrame(data, ["k", "v", "rid"])
     got = {
         (r["k"], r["rid"]): r["c"]
-        for r in global_running_sum(
-            df, ["k", "rid"], "v", out_col="c", num_partitions=5
-        ).collect()
+        for r in global_running_sum(df, ["k", "rid"], "v", out_col="c").collect()
     }
     acc = 0
     for k, v, rid in sorted(data, key=lambda t: (t[0], t[2])):

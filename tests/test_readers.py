@@ -85,3 +85,30 @@ def test_merge_schema_evolution_read(spark, tmp_path):
     assert [f.name for f in out.schema.fields] == ["id", "v", "score", "added_later"]
     got = {r["id"]: (r["score"], r["added_later"]) for r in out.collect()}
     assert got == {1: (None, None), 2: (9.5, None)}
+
+
+def test_enforced_read_raises_on_type_drift_cast_to_schema_absorbs_it(spark, tmp_path):
+    """An INT64 ``mmsi`` file read against an IntegerType declaration:
+    the enforced read analyzes without complaint (no footer is opened)
+    and raises when it executes; cast-by-name over an inferred read is
+    the drift-tolerant form."""
+    from pyspark.sql import types as T
+
+    from noaa_ais_glue_lakehouse_spark.sources.readers import (
+        cast_to_schema,
+        read_parquet_enforced,
+    )
+
+    path = str(tmp_path / "drift")
+    spark.createDataFrame([(366000001,)], "mmsi long").write.parquet(path)
+    declared = T.StructType([T.StructField("mmsi", T.IntegerType())])
+
+    enforced = read_parquet_enforced(spark, path, declared)
+    assert enforced.schema == declared
+    # a Py4JJavaError carrying the Spark error class
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        enforced.collect()
+
+    tolerant = cast_to_schema(spark.read.parquet(path), declared)
+    assert tolerant.schema == declared
+    assert [r["mmsi"] for r in tolerant.collect()] == [366000001]

@@ -52,6 +52,21 @@ def test_query_names_pass_through():
     assert cli["rest"] == ["dir", "qA", "qB"]
 
 
+def test_time_queries_names_after_out():
+    """Query names may follow ``--out`` (the documented usage line)."""
+    from time_queries import parse_args
+
+    args = parse_args(["sfdir", "--out", "t.json", "q172_max_concurrent_sessions"])
+    assert (args.sf_dir, args.out, args.names) == (
+        "sfdir",
+        "t.json",
+        ["q172_max_concurrent_sessions"],
+    )
+    args = parse_args(["sfdir", "qA", "--out", "t.json", "qB"])
+    assert args.names == ["qA", "qB"]
+    assert parse_args(["sfdir"]).names == []
+
+
 def test_check_scaling_breach_detection(tmp_path):
     """The scaling budget gate must exit nonzero on a breached exponent
     and on a missing budgeted probe, and zero when all are in budget."""

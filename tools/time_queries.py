@@ -21,12 +21,17 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir")
     ap.add_argument("--out", help="write {name: median_sec} JSON here")
     ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
+    # intermixed: query names may follow --out, as the usage line shows
+    return ap.parse_intermixed_args(argv)
+
+
+def main() -> None:
+    args = parse_args()
 
     import bench
     from noaa_ais_glue_lakehouse_spark.plans import catalog
