@@ -16,12 +16,13 @@ seed propagation (same window partitioning). Reads of a day-partitioned
 table carry a year/month/day partition predicate (the window widened by
 a day each side), so the scan opens only the window's partitions. Each
 window is evaluated once: the state snapshot (|entities| rows, tiny)
-comes from the partition directories the window's write just published,
-read back with the written schema, not from a second evaluation of the
-trajectory. The monthly summary scans the partials once: one rollup
-aggregation plus a window over start dates picks the voyages to
-rewrite. Nothing is cached: a cached plan is not coalesced by adaptive
-execution, so the curated write would land in more, smaller files.
+comes from the day partitions the window's write just published (an
+``observe()`` on the write collects their dates), read back with the
+written schema, not from a second evaluation of the trajectory. The
+monthly summary scans the partials once: one rollup aggregation plus a
+window over start dates picks the voyages to rewrite. Nothing is
+cached: a cached plan is not coalesced by adaptive execution, so the
+curated write would land in more, smaller files.
 Every mode runs one plan: a full window is seeded from an empty
 snapshot, as a first window without a prior snapshot is, so a session
 that runs a full recompute and then daily windows compiles the
@@ -32,7 +33,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from noaa_ais_glue_lakehouse_spark.functions.spatial import geohash_expr, haversine_km
@@ -131,12 +132,16 @@ def run_trajectory_window(
     ``fact_voyage_trajectory.py:359-364``) from the rows just committed,
     merged with the prior snapshot. Taking it from the sampled rows is
     exact: sampling keeps each entity's last point of every day, so the
-    latest row per entity is the unsampled trajectory's. Only the
-    partition directories this call published are read back, so a
-    window day that produced no rows cannot feed stale rows into the
-    state.
+    latest row per entity is the unsampled trajectory's. Only the day
+    partitions this call published (observed on the write) are read
+    back, so a window day that produced no rows cannot feed stale rows
+    into the state. Any other ``mode`` raises ``ValueError``.
     """
     from noaa_ais_glue_lakehouse_spark.schemas import STATE_SNAPSHOT_SCHEMA
+
+    modes = ("incremental", "recompute", "full")
+    if mode not in modes:
+        raise ValueError(f"unknown window mode {mode!r}; one of {modes}")
 
     start = dt.date.fromisoformat(start_date)
     end = dt.date.fromisoformat(end_date)
@@ -182,12 +187,19 @@ def run_trajectory_window(
             out, "MMSI", "BaseDateTime", "LAT", "LON"
         )
 
-    published = write_partitioned_parquet(out, curated_path, PARTITION_COLS)
+    published = Observation()
+    write_partitioned_parquet(
+        out.observe(published, F.collect_set(F.make_date(*PARTITION_COLS)).alias("days")),
+        curated_path,
+        PARTITION_COLS,
+    )
+    # integer partition values need no Hive escaping, so the directories
+    # follow from the observed dates
+    root = curated_path.rstrip("/")
+    day_dirs = [f"{root}/year={d.year}/month={d.month}/day={d.day}" for d in published.get["days"]]
     committed = (
-        spark.read.schema(out.schema)
-        .option("basePath", curated_path)
-        .parquet(*published)
-        if published
+        spark.read.schema(out.schema).option("basePath", root).parquet(*day_dirs)
+        if day_dirs
         else spark.createDataFrame([], out.schema)
     )
     # MERGED with the prior snapshot: an entity silent this window keeps

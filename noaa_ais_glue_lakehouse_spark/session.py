@@ -46,9 +46,6 @@ def _default(cores):
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.shuffle.partitions": os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"),
-        # dynamic partition overwrite: the conf the reference actually relied
-        # on (its parquet `replaceWhere` was a no-op; SURVEY §7.4.2)
-        "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # Arrow for pandas_udf / applyInPandas exchange
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # read nanosecond-precision parquet timestamps as long (Spark has no

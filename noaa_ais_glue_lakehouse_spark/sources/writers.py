@@ -6,15 +6,19 @@ hold state. Scale stance:
 - Partition layout is the contract: partitioned parquet + dynamic
   partition overwrite means a rerun replaces exactly the partitions it
   produced and never truncates the table (the reference's safety net,
-  ``pipelines/raw_to_staging.py:23,172-178``).
+  ``pipelines/raw_to_staging.py:23,172-178``). Every partitioned parquet
+  overwrite (staging, curated, partials, summary, state snapshot, the
+  key-delete rewrite) is ``write_partitioned_parquet``, one Spark commit.
 - Window-scoped overwrite (S5) implements the *semantics* the reference
   intended with its Delta-only ``replaceWhere`` option that the plain
   parquet writer silently ignored (``fact_voyage_trajectory.py:342-356``,
   SURVEY §7.4.2) without a sink of its own: ``run_trajectory_window``
   filters its input to the window's ``BaseDateTime`` range, so the
   partitioned sink below can only ever replace the window's partitions.
-  On a Delta-enabled cluster, the same write is
-  ``.format("delta").option("replaceWhere", predicate)``.
+  Spark stages the job's files under ``.spark-staging-<job>`` and touches
+  published partitions only after every task has committed, so a failed
+  window write leaves the table as it was. On a Delta-enabled cluster,
+  the same write is ``.format("delta").option("replaceWhere", predicate)``.
 - Quarantine is partition-aware per row (fixes SURVEY §7.4.5, where the
   reference stamped the whole quarantine write with ``df.first()``'s
   year/month/day — correct only because its job loops one day at a time).
@@ -22,6 +26,7 @@ hold state. Scale stance:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,84 +47,24 @@ def bounded_count(df: DataFrame, threshold: int) -> int:
     return df.limit(threshold + 1).count()
 
 
-def _swap_staged_partitions(
-    spark: SparkSession, staging: str, path: str, partition_cols: list[str]
-) -> list[str]:
-    """Publish a staged partitioned-parquet write: one filesystem rename
-    per staged partition directory into the table root (replacing any
-    existing version of that partition), then drop the emptied staging
-    tree. Each rename is metadata-only; a crash between renames leaves
-    every partition either fully-old or fully-new, never mixed, and the
-    dot-prefixed staging residue is invisible to parquet readers.
-    Returns the published partition directories (qualified paths)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(path).getFileSystem(conf)
-    staging_p = fs.makeQualified(HPath(staging))
-    root_p = fs.makeQualified(HPath(path))
-    # walk exactly len(partition_cols) directory levels below staging —
-    # the ACTUAL on-disk partition dir names (Hive-escaped values come
-    # back verbatim; no hand-built col=value fragments)
-    levels = [staging_p]
-    for _ in partition_cols:
-        nxt = []
-        for d in levels:
-            for st in fs.listStatus(d):
-                if st.isDirectory():
-                    nxt.append(st.getPath())
-        levels = nxt
-    staging_str = staging_p.toString()
-    published = []
-    for staged_dir in levels:
-        rel = staged_dir.toString()[len(staging_str) + 1 :]
-        dest = HPath(f"{root_p.toString()}/{rel}")
-        if fs.exists(dest):
-            fs.delete(dest, True)
-        fs.mkdirs(dest.getParent())
-        fs.rename(staged_dir, dest)
-        published.append(dest.toString())
-    fs.delete(staging_p, True)  # _SUCCESS marker + emptied tree
-    return published
-
-
 def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> list[str] | None:
-    """S4 — partitioned parquet sink with dynamic-partition-overwrite
-    SEMANTICS (only partitions present in ``df`` are replaced), made
-    CRASH-SAFE via stage-then-swap.
+    df: DataFrame, path: str, partition_cols: list[str]
+) -> None:
+    """S4 — the one partitioned-parquet overwrite: only the partitions
+    present in ``df`` are replaced (dynamic partition overwrite, passed
+    per write, so the session's ``partitionOverwriteMode`` never matters).
 
     Reference: ``pipelines/raw_to_staging.py:172-178`` +
-    ``partitionOverwriteMode=dynamic`` at ``:23``. Spark's own dynamic
-    overwrite deletes each replaced partition before committing its
-    replacement, so a mid-commit crash can lose partitions that were
-    fine before the job started; here the write job — the long,
-    failure-prone phase — lands in a hidden ``.staging-<token>``
-    directory and published partitions are touched only by the
-    near-instant per-partition rename swap afterwards (pinned by a
-    kill-mid-write test). Non-overwrite modes pass straight through:
-    an append commit never deletes published data, so the v1
-    FileOutputCommitter's task-file publish is already safe.
-
-    Returns the partition directories the overwrite published (exactly
-    this write's rows live there); None for the pass-through modes.
+    ``partitionOverwriteMode=dynamic`` at ``:23``. Spark's commit is the
+    crash safety: the job's files land under ``path/.spark-staging-<job>``
+    and a partition directory is replaced (delete, then rename the staged
+    one in) only after every task has committed. A job that fails leaves
+    every published partition as it was and nothing at the table root
+    (pinned by a kill-mid-write test).
     """
-    if mode != "overwrite" or not partition_cols:
-        # a per-write option, so the caller's session conf is left as it was
-        df.write.mode(mode).option("partitionOverwriteMode", "dynamic").partitionBy(
-            *partition_cols
-        ).parquet(path)
-        return None
-    import uuid
-
-    spark = df.sparkSession
-    staging = f"{path.rstrip('/')}/.staging-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-    return _swap_staged_partitions(spark, staging, path, partition_cols)
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_cols
+    ).parquet(path)
 
 
 def write_quarantine(
@@ -163,12 +108,17 @@ def write_quarantine(
 def write_state_snapshot(df: DataFrame, prefix: str, date_str: str) -> None:
     """S7 — dated per-entity state snapshot (1 row per entity).
 
-    Layout ``{prefix}/by_date={date_str}/`` mirrors
-    ``utils/state_io.py:36-45``; ``coalesce(1)`` because the snapshot is
-    per-entity-latest and small by construction.
+    The one-value ``by_date`` partition of the table at ``prefix``,
+    written through ``write_partitioned_parquet``: the layout
+    ``{prefix}/by_date={date_str}/`` mirrors ``utils/state_io.py:36-45``,
+    and a write that fails leaves the prior snapshot of that date
+    readable. As with every dynamic overwrite, an empty ``df`` replaces
+    nothing: a prior snapshot of that date stays, as the curated days of
+    a window that produced no rows do. ``coalesce(1)`` because the
+    snapshot is per-entity-latest and small by construction.
     """
-    df.coalesce(1).write.mode("overwrite").parquet(
-        f"{prefix.rstrip('/')}/by_date={date_str}/"
+    write_partitioned_parquet(
+        df.coalesce(1).withColumn("by_date", F.lit(date_str)), prefix, ["by_date"]
     )
 
 
@@ -178,13 +128,18 @@ def read_state_snapshot_by_date(
     """S8 — dated snapshot source with empty-DataFrame fallback (first
     run / missing day). Reference: ``utils/state_io.py:14-29``.
 
-    No existence probe: the read itself raises on a missing directory
-    and on one without data files (nothing to infer a schema from).
+    No existence probe: the read itself raises ``PATH_NOT_FOUND`` on a
+    missing directory and ``UNABLE_TO_INFER_SCHEMA`` on one without data
+    files, and only those two mean "no snapshot". Anything else (a
+    corrupt data file, a permission error) raises: reading it as empty
+    would silently restart every entity's voyage ids.
     """
     path = f"{prefix.rstrip('/')}/by_date={date_str}/"
     try:
         raw = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
         return spark.createDataFrame([], schema)
     # cast-by-name to the declared schema rather than an enforced read:
     # an enforced read THROWS on physical-type drift, and treating that as
@@ -259,7 +214,9 @@ def delete_keys_partition_scoped(
        the DISTINCT affected partition tuples — a driver-sized list;
     2. only those partitions are re-read, anti-joined, and replaced via
        dynamic partition overwrite. Untouched partitions' files are
-       never opened, never rewritten.
+       never opened, never rewritten. The rewrite is
+       ``write_partitioned_parquet``, the same commit as every other
+       partitioned overwrite.
 
     Partition tuples are matched with NULL-SAFE equality (a NULL
     partition value is legal and must still be purgeable), and a fully-
@@ -352,9 +309,7 @@ def delete_keys_partition_scoped(
         kept_surviving = df.filter(any_partition(surviving)).join(
             key_df, key_col, "left_anti"
         )
-        kept_surviving.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(*partition_cols).parquet(path)
+        write_partitioned_parquet(kept_surviving, path, partition_cols)
     return len(affected)
 
 

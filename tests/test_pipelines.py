@@ -24,6 +24,8 @@ from noaa_ais_glue_lakehouse_spark.pipelines.staging_to_curated import (
     run_voyage_summary_monthly,
     voyage_daily_partials,
 )
+from noaa_ais_glue_lakehouse_spark.schemas import STATE_SNAPSHOT_SCHEMA
+from noaa_ais_glue_lakehouse_spark.sources.writers import read_state_snapshot_by_date
 
 
 def _raw_rows():
@@ -545,6 +547,22 @@ def test_window_scans_staging_once(spark, tmp_path):
     assert any(f"[file:{curated}/year=2024/month=1/day=2]" in p for p in plans)
 
 
+def test_empty_window_publishes_and_reads_back_nothing(spark, tmp_path):
+    """A window whose days hold no staging rows observes an empty set of
+    published days: it replaces no curated partition, reads none back and
+    leaves the state empty."""
+    staging = str(tmp_path / "staging")
+    _day_partitioned_staging(spark, staging)
+    curated, state = tmp_path / "curated", str(tmp_path / "state")
+    run_trajectory_window(spark, staging, str(curated), state, "2024-01-01", "2024-01-01")
+    before = {p: p.stat().st_mtime_ns for p in curated.rglob("*.parquet")}
+    out = run_trajectory_window(spark, staging, str(curated), state, "2024-01-05", "2024-01-05")
+    assert out.count() == 0
+    assert {p: p.stat().st_mtime_ns for p in curated.rglob("*.parquet")} == before
+    snapshot = read_state_snapshot_by_date(spark, state, "2024-01-05", STATE_SNAPSHOT_SCHEMA)
+    assert snapshot.count() == 0
+
+
 def test_window_and_summary_reads_prune_partitions(spark, tmp_path):
     """The staging read of a window and the curated read of the monthly
     summary carry a year/month/day partition predicate at the scan."""
@@ -620,3 +638,13 @@ def test_one_pass_summary_matches_semi_join_selection(spark, tmp_path):
         assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), month
     # voyage 1 (Jan 31 only) survived the Feb run's rewrite of its start date
     assert spark.read.parquet(summary).count() == 7
+
+
+def test_unknown_window_mode_raises(spark, tmp_path):
+    """A mode outside incremental / recompute / full is an error, not an
+    incremental run that silently seeds from state."""
+    with pytest.raises(ValueError, match="unknown window mode 'ful'"):
+        run_trajectory_window(
+            spark, str(tmp_path / "staging"), str(tmp_path / "curated"),
+            str(tmp_path / "state"), "2024-01-01", "2024-01-01", mode="ful",
+        )

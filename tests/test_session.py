@@ -30,7 +30,6 @@ def test_default_profile_under_perfbench_env(perfbench_env):
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.adaptive.skewJoin.enabled", "true"),
         ("spark.sql.shuffle.partitions", "4"),
-        ("spark.sql.sources.partitionOverwriteMode", "dynamic"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.ui.enabled", "false"),

@@ -291,12 +291,13 @@ def test_zordered_write_tightens_zone_maps(spark, tmp_path):
 
 
 def test_partitioned_sink_crash_mid_write_leaves_table_intact(spark, tmp_path):
-    """S4's stage-then-swap contract, the window write's sink too: a
-    write job that dies mid-flight — after tasks may already have
-    produced files — leaves every published partition byte-identical,
-    including the partitions the failed write was going to replace.
-    Spark's own dynamic overwrite deletes old partition data during the
-    commit, so a crash there can lose partitions; staging must not."""
+    """S4's commit contract, the window write's sink too: a write job
+    that dies mid-flight — after tasks may already have produced files —
+    leaves every published partition byte-identical, including the
+    partitions the failed write was going to replace, and nothing at the
+    table root. Spark's dynamic overwrite stages the job's files under
+    ``.spark-staging-<job>`` and touches published partitions only after
+    every task has committed, so a failed job loses no partition."""
     import os
 
     from pyspark.sql import functions as F
@@ -330,11 +331,9 @@ def test_partitioned_sink_crash_mid_write_leaves_table_intact(spark, tmp_path):
         raise
     except Exception:
         pass
+    assert not [d for d in os.listdir(out) if d.startswith(".")]
     after = {}
     for root, _dirs, files in os.walk(out):
-        p_rel = os.path.relpath(root, out)
-        if p_rel.startswith(".staging-") or "/.staging-" in p_rel:
-            continue  # failed stage residue is allowed, readers skip dotfiles
         for f in files:
             p = os.path.join(root, f)
             after[p] = (os.path.getsize(p), os.path.getmtime(p))
@@ -344,9 +343,10 @@ def test_partitioned_sink_crash_mid_write_leaves_table_intact(spark, tmp_path):
 
 
 def test_partitioned_sink_swap_replaces_only_present_partitions(spark, tmp_path):
-    """Dynamic-overwrite SEMANTICS survive the stage-then-swap rewrite:
-    overwriting with a frame containing only day=2 must replace day=2,
-    keep day=1 untouched, and leave no staging residue."""
+    """Dynamic-overwrite semantics: overwriting with a frame containing
+    only day=2 must replace day=2, keep day=1 untouched, and leave no
+    staging residue (``.spark-staging-*`` or any other dot entry) at the
+    table root."""
     import os
 
     from noaa_ais_glue_lakehouse_spark.sources.writers import (
@@ -362,7 +362,7 @@ def test_partitioned_sink_swap_replaces_only_present_partitions(spark, tmp_path)
     )
     got = {(r["day"], r["v"]) for r in spark.read.parquet(out).collect()}
     assert got == {(1, 1), (2, 99)}
-    assert not [d for d in os.listdir(out) if d.startswith(".staging-")]
+    assert not [d for d in os.listdir(out) if d.startswith(".")]
 
 
 def test_versioned_write_time_travel(spark, tmp_path):
@@ -750,3 +750,51 @@ def test_state_snapshot_missing_or_empty_dir_is_empty(spark, tmp_path):
         got = read_state_snapshot_by_date(spark, str(prefix), date, STATE_SNAPSHOT_SCHEMA)
         assert got.schema == STATE_SNAPSHOT_SCHEMA
         assert got.count() == 0
+
+
+def test_failed_state_snapshot_write_keeps_prior_snapshot(spark, tmp_path):
+    """The snapshot goes through the partitioned sink's commit: a write
+    that fails mid-job leaves the prior snapshot of that date readable,
+    rather than an emptied directory that reads as "no state" and
+    restarts every entity's voyage ids at 0."""
+    import pytest
+
+    prefix = str(tmp_path / "state")
+    df = spark.createDataFrame(
+        [(7, dt.datetime(2024, 1, 1, 23), 1.0, 2.0, 3)], STATE_SNAPSHOT_SCHEMA
+    )
+    write_state_snapshot(df, prefix, "2024-01-01")
+    doomed = df.withColumn(
+        "VoyageID",
+        F.when(F.col("MMSI") < 0, F.col("VoyageID")).otherwise(
+            F.assert_true(F.lit(False)).cast("long")
+        ),
+    )
+    with pytest.raises(Exception):
+        write_state_snapshot(doomed, prefix, "2024-01-01")
+    got = read_state_snapshot_by_date(spark, prefix, "2024-01-01", STATE_SNAPSHOT_SCHEMA)
+    assert [tuple(r) for r in got.collect()] == [(7, dt.datetime(2024, 1, 1, 23), 1.0, 2.0, 3)]
+    # the snapshot layout is unchanged: one date directory, the declared columns
+    assert os.listdir(prefix) == ["by_date=2024-01-01"]
+    assert spark.read.parquet(f"{prefix}/by_date=2024-01-01").columns == STATE_SNAPSHOT_SCHEMA.names
+
+
+def test_corrupt_state_snapshot_raises(spark, tmp_path):
+    """Only a missing or data-less snapshot directory means "no state";
+    a snapshot whose data file is corrupt raises instead of reading as
+    0 rows."""
+    import pytest
+
+    prefix = tmp_path / "state"
+    df = spark.createDataFrame(
+        [(7, dt.datetime(2024, 1, 1, 23), 1.0, 2.0, 3)], STATE_SNAPSHOT_SCHEMA
+    )
+    write_state_snapshot(df, str(prefix), "2024-01-01")
+    day = prefix / "by_date=2024-01-01"
+    for f in day.iterdir():
+        if f.name.startswith("part-"):
+            f.write_bytes(b"not parquet" * 8)
+        elif f.name.endswith(".crc"):
+            f.unlink()  # an object store keeps no checksum sidecar
+    with pytest.raises(Exception, match="FILE_FOOTER|not a Parquet file"):
+        read_state_snapshot_by_date(spark, str(prefix), "2024-01-01", STATE_SNAPSHOT_SCHEMA).count()
